@@ -34,6 +34,7 @@ deliberately (cold-file I/O is measured by the warmup touch pass).
 from __future__ import annotations
 
 import json
+import numbers
 import os
 import sys
 import time
@@ -304,6 +305,21 @@ def _run_queries(sf_dir: str) -> tuple[dict, dict]:
     return timings, errors
 
 
+STREAM_SINK_REF_FLOOR = 700_000
+
+
+def _stream_sink_flags(ss) -> dict:
+    """Canary keys for a stream-sink reading: the reading, the reference
+    floor and whether it fell below it.  Any real number counts (the
+    sink may report a float rate); a bool, None or an error string
+    yields no keys."""
+    if not isinstance(ss, numbers.Real) or isinstance(ss, bool):
+        return {}
+    return {"stream_sink": ss,
+            "stream_sink_ref_floor": STREAM_SINK_REF_FLOOR,
+            "stream_sink_below_ref": ss < STREAM_SINK_REF_FLOOR}
+
+
 def _one_attempt(sf_dir: str) -> dict:
     """before-canary → query pass → write bench → after-canary verdict.
     Both canary samples run with no other JVM alive (the query session
@@ -348,11 +364,7 @@ def _one_attempt(sf_dir: str) -> dict:
     # 748-812k, HEAD >= r17).  Flag readings below the lowest same-tree
     # A/B figure so future drift is visible in the artifact without
     # gating the degraded verdict on an unbanded metric.
-    ss = write_tp.get("stream_sink")
-    if isinstance(ss, int):
-        canary["stream_sink"] = ss
-        canary["stream_sink_ref_floor"] = 700_000
-        canary["stream_sink_below_ref"] = ss < 700_000
+    canary.update(_stream_sink_flags(write_tp.get("stream_sink")))
     # In/out disagreement at the band edge gets a THIRD sample before
     # the verdict (round-12 verdict task 3): one edge miss may be
     # jitter; two of three is a window property.

@@ -1948,6 +1948,33 @@ class TestSkew:
             salted_agg(df, ["k"], {"p50": ("v", "percentile")})
 
 
+class TestBandsValidation:
+    @pytest.mark.parametrize("bands", [0, -4, 5])
+    @pytest.mark.parametrize("entry", [
+        "minhash_signature", "minhash_lsh_pairs", "minhash_lsh_pairs_vs",
+        "near_dup_clusters", "build_minhash_store"])
+    def test_bands_must_divide_num_hashes(self, docs, tmp_path, entry,
+                                          bands):
+        """Every public banding entry point rejects a zero, negative or
+        non-dividing ``bands`` with the same ValueError (``bands=0``
+        used to surface as a ZeroDivisionError)."""
+        calls = {
+            "minhash_signature": lambda: dedup.minhash_signature(
+                docs, num_hashes=64, bands=bands),
+            "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(
+                docs, num_hashes=64, bands=bands),
+            "minhash_lsh_pairs_vs": lambda: dedup.minhash_lsh_pairs_vs(
+                docs, docs, num_hashes=64, bands=bands),
+            "near_dup_clusters": lambda: dedup.near_dup_clusters(
+                docs, num_hashes=64, bands=bands),
+            "build_minhash_store": lambda: dedup.build_minhash_store(
+                docs, str(tmp_path / "store"), num_hashes=64,
+                bands=bands),
+        }
+        with pytest.raises(ValueError, match="positive divisor"):
+            calls[entry]()
+
+
 class TestClusters:
     def test_checkpoint_blocks_bounded(self, spark):
         """Superseded per-round localCheckpoints must be freed as the
@@ -1969,6 +1996,25 @@ class TestClusters:
         assert len(leaked) <= 2, f"{len(leaked)} persisted RDDs leaked"
         for h in getattr(out, "_zdb_cache_handles", []):
             h.unpersist()
+
+    def test_release_frees_last_checkpoint(self, spark, docs):
+        """release() after collecting the labels leaves no persisted RDD
+        behind on the distributed path, the final round's
+        localCheckpoint included."""
+        def persistent_ids():
+            m = spark.sparkContext._jsc.getPersistentRDDs()
+            return set(m.keySet().toArray())
+
+        # compare ids, not sizes: the per-round System.gc() lets the
+        # ContextCleaner drop RDDs earlier tests left unreferenced
+        docs.count()  # materialize the fixture's own cache first
+        before = persistent_ids()
+        out = dedup.near_dup_clusters(docs, driver_threshold=0)
+        got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 6: 1}
+        assert persistent_ids() - before
+        dedup.release(out)
+        assert persistent_ids() - before == set()
 
     def test_components_exact(self, spark):
         pairs = spark.createDataFrame(

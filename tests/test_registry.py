@@ -397,6 +397,28 @@ def test_bench_canary_verdict_edges():
     assert verdict(None, None)["below_band"] is None
 
 
+def test_bench_stream_sink_flags_accept_any_real():
+    """The stream-sink drift flag takes any real reading, float rates
+    included; a bool, None or an error string adds no canary keys."""
+    import importlib.util
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "bench_mod3", os.path.join(root, "bench.py"))
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    floor = bench.STREAM_SINK_REF_FLOOR
+    assert bench._stream_sink_flags(floor - 0.5) == {
+        "stream_sink": floor - 0.5, "stream_sink_ref_floor": floor,
+        "stream_sink_below_ref": True}
+    assert bench._stream_sink_flags(floor)["stream_sink_below_ref"] is False
+    assert bench._stream_sink_flags(812_000.25)["stream_sink"] == 812_000.25
+    for reading in (True, None, "RuntimeError: boom"):
+        assert bench._stream_sink_flags(reading) == {}
+
+
 def test_bench_compact_line_size_guard():
     """bench.py stdout-size guard (round-13 verdict task 2): the driver
     records only ~2000 chars of bench stdout, and BENCH_r13.json came

@@ -491,6 +491,174 @@ class TestScan:
         assert t.scan(base.isoformat(), str(T0 + DAY)).count() == 2
 
 
+HOUR = 3_600 * NS
+
+
+@pytest.fixture(scope="module")
+def days40_home(spark, tmp_path_factory):
+    """A listing-mode table of 40 day partitions, 3 ticks a day (hours
+    0, 11 and 23), more days than Spark's default parallel-listing
+    threshold of 32."""
+    home = str(tmp_path_factory.mktemp("days40") / "zdb_home")
+    t = Table.create(spark, make_schema("d40"), home=home)
+    t.write(spark.createDataFrame(
+        [Row(ts=T0 + d * DAY + h * HOUR, sym=f"S{(d + h) % 3}",
+             price=float(d * 24 + h), size=d + h)
+         for d in range(40) for h in (0, 11, 23)]))
+    return home
+
+
+def _spark_jobs(spark, fn):
+    """``(fn(), ids of the Spark jobs fn launched)``, read from the
+    status store once the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "scan planning")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestScanPlanning:
+    """``Table.scan`` on a listing table chooses its ``dt`` directories
+    on the driver and reads them with the declared schema, so building
+    the scan launches no Spark job."""
+
+    COLS = ["ts", "sym", "price", "size"]
+
+    @staticmethod
+    def _copy(spark, days40_home, tmp_home):
+        import shutil
+
+        shutil.copytree(days40_home, tmp_home)
+        return Table.open(spark, "d40", home=tmp_home)
+
+    def test_scan_plans_without_spark_jobs(self, spark, days40_home):
+        t = Table.open(spark, "d40", home=days40_home)
+        for lo, hi in [(T0 + 3 * DAY, T0 + 3 * DAY + 1),
+                       (T0, T0 + 35 * DAY), (None, None),
+                       (T0 + 5 * DAY, None), (None, T0 + DAY)]:
+            df, jobs = _spark_jobs(spark, lambda: t.scan(lo, hi))
+            assert jobs == [], (lo, hi)
+            assert df.columns == self.COLS
+        # the probe does see jobs: df() still infers its schema from a
+        # footer, which takes a Spark job
+        _, jobs = _spark_jobs(spark, t.df)
+        assert jobs
+        # only the two in-range day directories feed the scan
+        files = t.scan(T0 + 3 * DAY, T0 + 4 * DAY).inputFiles()
+        assert files and all("dt=2024-01-04" in f or "dt=2024-01-05" in f
+                             for f in files)
+        assert t.symbols("sym") == ["S0", "S1", "S2"]
+
+    def test_rows_match_filtered_tree_read(self, spark, days40_home):
+        t = Table.open(spark, "d40", home=days40_home)
+        tree = spark.read.parquet(os.path.join(t.path, "parquet"))
+        for lo, hi in [(T0, T0), (T0 + 5 * DAY + 1, T0 + 12 * DAY),
+                       (T0 - DAY, T0 + 3 * DAY + 11 * HOUR),
+                       (T0 + 38 * DAY, None), (None, T0 + 2 * DAY),
+                       (None, None), (T0 + 39 * DAY + 23 * HOUR, None),
+                       (T0 + 7 * DAY + 12 * HOUR, T0 + 8 * DAY + HOUR)]:
+            want = tree
+            if lo is not None:
+                want = want.where(F.col("ts") >= lo)
+            if hi is not None:
+                want = want.where(F.col("ts") <= hi)
+            got = sorted(t.scan(lo, hi).collect())
+            assert got, (lo, hi)
+            assert got == sorted(want.select(*self.COLS).collect()), \
+                (lo, hi)
+
+    def test_hidden_and_metadata_files_ignored(self, spark, days40_home,
+                                               tmp_home):
+        import shutil
+
+        t = self._copy(spark, days40_home, tmp_home)
+        root = os.path.join(t.path, "parquet")
+        day = os.path.join(root, "dt=2024-01-04")
+        part = next(os.path.join(day, f) for f in sorted(os.listdir(day))
+                    if f.startswith("part-"))
+        # readable copies under hidden names would double the day's
+        # rows; unreadable junk would fail the read outright
+        shutil.copy(part, os.path.join(day, "_copy.parquet"))
+        shutil.copy(part, os.path.join(day, ".copy.parquet"))
+        with open(os.path.join(day, ".part-junk.parquet.crc"), "wb") as f:
+            f.write(b"not parquet")
+        open(os.path.join(day, "_SUCCESS"), "w").close()
+        os.makedirs(os.path.join(root, "_junk", "dt=2024-01-04"))
+        shutil.copy(part, os.path.join(root, "_junk", "dt=2024-01-04",
+                                       os.path.basename(part)))
+        assert t.scan(T0 + 3 * DAY, T0 + 4 * DAY - 1).count() == 3
+        assert t.scan(T0, T0 + 10 * DAY - 1).count() == 30
+        assert t.scan().count() == 120
+
+    def test_empty_range_returns_declared_columns(self, spark,
+                                                  days40_home):
+        t = Table.open(spark, "d40", home=days40_home)
+        declared = [(c.name, c.spark_type().simpleString())
+                    for c in t.schema.columns]
+        for lo, hi in [(T0 + 100 * DAY, T0 + 101 * DAY),
+                       (T0 - 9 * DAY, T0 - DAY),
+                       (T0 + 9 * DAY, T0 + 2 * DAY)]:
+            df, jobs = _spark_jobs(spark, lambda: t.scan(lo, hi))
+            assert jobs == []
+            assert df.dtypes == declared
+            assert df.count() == 0
+
+    def test_added_column_default_filled(self, spark, days40_home,
+                                         tmp_home):
+        t = self._copy(spark, days40_home, tmp_home)
+        t.add_column("venue", ColumnType.SYMBOL8, default="UNK")
+        df, jobs = _spark_jobs(
+            spark, lambda: t.scan(T0 + 2 * DAY, T0 + 4 * DAY,
+                                  ["ts", "venue"]))
+        assert jobs == []
+        assert [r.venue for r in df.collect()] == ["UNK"] * 7
+        t.write(spark.createDataFrame(
+            [Row(ts=T0 + 40 * DAY, sym="S0", price=1.0, size=1,
+                 venue="XNAS")]))
+        got = {r.ts: r.venue for r in t.scan(T0 + 39 * DAY).collect()}
+        assert got == {T0 + 39 * DAY: "UNK", T0 + 39 * DAY + 11 * HOUR:
+                       "UNK", T0 + 39 * DAY + 23 * HOUR: "UNK",
+                       T0 + 40 * DAY: "XNAS"}
+
+    def test_stream_sink_log_is_the_file_list(self, spark, tmp_home,
+                                              tmp_path):
+        """A table fed by the raw ``stream_writer`` sink is read through
+        the sink's ``_spark_metadata`` log: a parquet file in a day
+        directory that the log never committed is not read."""
+        import shutil
+
+        from zdb_spark.streaming.ingest import stream_writer
+
+        src = str(tmp_path / "src")
+        src_schema = "ts long, sym string, price double, size long"
+        spark.createDataFrame(
+            [(T0 + i * 8 * HOUR, "S", float(i), i) for i in range(9)],
+            src_schema).write.parquet(src)
+        t = Table.create(spark, make_schema("ss"), home=tmp_home)
+        root = os.path.join(t.path, "parquet")
+        q = stream_writer(spark.readStream.schema(src_schema).parquet(src),
+                          root, str(tmp_path / "ckpt"))
+        q.awaitTermination(120)
+        assert os.path.isdir(os.path.join(root, "_spark_metadata"))
+        day = os.path.join(root, "dt=2024-01-02")
+        part = next(os.path.join(day, f) for f in os.listdir(day)
+                    if f.startswith("part-"))
+        shutil.copy(part, os.path.join(day, "part-99999-stray.parquet"))
+        df, jobs = _spark_jobs(spark, lambda: t.scan(T0 + DAY,
+                                                     T0 + 2 * DAY - 1))
+        assert jobs == []
+        assert sorted(r.price for r in df.collect()) == [3.0, 4.0, 5.0]
+        assert t.scan().count() == 9
+
+
 class TestCompaction:
     def test_compact_merges_small_files(self, spark, tmp_home):
         t = Table.create(spark, make_schema(), home=tmp_home)

@@ -68,9 +68,15 @@ def release(df: DataFrame) -> None:
     consumes the result.  Long-lived sessions (the HTTP server) should
     call ``release(result)`` after materializing; otherwise retained
     blocks accumulate across repeated dedup calls.
+
+    ``_zdb_checkpoints`` holds localCheckpoints the result still reads
+    from; ``DataFrame.unpersist`` is a no-op on those (they are not in
+    the cache manager), so their RDDs are freed directly.
     """
     for h in getattr(df, "_zdb_cache_handles", []):
         h.unpersist()
+    for ckpt in getattr(df, "_zdb_checkpoints", []):
+        _unpersist_checkpoint(ckpt)
 
 
 def portable_hash64(c: Column) -> Column:
@@ -266,6 +272,15 @@ def _xxh64_sig_udf(num_hashes: int, bands: int = 0):
     return pandas_udf(_sig_batch, ArrayType(LongType()))
 
 
+def _check_bands(num_hashes: int, bands: int) -> None:
+    """LSH banding splits the signature into ``bands`` equal slices, so
+    ``bands`` must be a positive divisor of ``num_hashes``."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands must be a positive divisor of num_hashes "
+            f"({num_hashes}), got {bands}")
+
+
 def minhash_signature(df: DataFrame, text_col: str = "text",
                       num_hashes: int = 64, k: int = 5,
                       out_col: str = "minhash",
@@ -320,8 +335,8 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     the SINGLE materialized UDF output column (PythonUDF extraction
     dedups the one call — the captured plan shows one ArrowEvalPython).
     """
-    if bands is not None and num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    if bands is not None:
+        _check_bands(num_hashes, bands)
     sig = _xxh64_sig_udf(num_hashes, bands or 0)
     sh = shingles_col if shingles_col is not None else "_zdb_sh_tmp"
     out = df.withColumn(sh, hashed_shingles(text_col, k))
@@ -400,8 +415,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     boilerplate floods that one bucket — see the module docstring for
     how to size the cap.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    _check_bands(num_hashes, bands)
     # Materialize signatures+shingles ONCE: the candidate self-join would
     # otherwise duplicate the (large) minhash expression tree on both
     # sides of the join and recompute it per band row.  The hashed
@@ -495,8 +509,7 @@ def minhash_lsh_pairs_vs(df: DataFrame, other: DataFrame,
     ``minhash_lsh_pairs`` (shared helpers), so thresholds and recall
     characteristics transfer unchanged.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    _check_bands(num_hashes, bands)
     oid = other_id_col or id_col
     base_a = (minhash_signature(df, text_col, num_hashes, k,
                                 shingles_col="_sh", bands=bands)
@@ -901,6 +914,9 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
                         F.col("lbl").alias("cluster_id"))
     out._zdb_cache_handles = [edges,
                               *getattr(pairs, "_zdb_cache_handles", [])]
+    # the last round's checkpoint backs the lazy result, so release()
+    # frees it once the caller has consumed the labels
+    out._zdb_checkpoints = [ckpt]
     # rounds-to-convergence == observed component diameter bound; the
     # scale probe records this so SCALE.md can show the iteration count
     # stays flat (~diameter 2-3 for template groups) as the corpus grows.
@@ -1224,8 +1240,7 @@ def build_minhash_store(df: DataFrame, path: str, text_col: str = "text",
     import json
     import os
 
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    _check_bands(num_hashes, bands)
     _write_store_rows(df, path, num_hashes, bands, k, text_col, id_col,
                       mode="errorifexists")
     with open(os.path.join(path, "params.json"), "w") as f:

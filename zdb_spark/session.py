@@ -68,6 +68,13 @@ _DEFAULTS = {
     "spark.sql.parquet.enableVectorizedReader": "true",
     # Keep split sizes reasonable so a 100 TB scan yields sane task counts.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    # List table directories on the driver, never in a Spark job.  Tables
+    # live on a local POSIX filesystem (their commits rely on os.replace
+    # and O_EXCL), where listing a directory costs microseconds.  Spark's
+    # default of 32 paths suits object stores; here it only turns any
+    # scan wider than 32 day partitions into a listing job of about one
+    # task per directory before the query itself runs.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
     # Arrow batch size for mapInPandas / pandas UDFs (zdb's per-partition
     # column-slice analogue).
     "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",

@@ -2079,13 +2079,12 @@ class Table:
         return df
 
     def df(self) -> DataFrame:
-        # NB: the manifest branch below is intentionally DUPLICATED in
-        # _df_pruned — keep the two in sync (evolved-schema reader,
-        # empty-frame schema, basePath read, added-defaults).  A shared
-        # helper would be cleaner, but editing this function's body
-        # trips tools/changed_gates.py's name-reference closure on the
-        # ubiquitous local name `df` and floods rule-1 with ~140
-        # false-positive gates (r18 review finding, accepted tradeoff).
+        # The whole snapshot as Spark's own discovery sees it: footer
+        # schema inference on non-evolved tables, and on listing tables
+        # a root read whose ``dt`` Spark infers (as a date for daily
+        # partitions).  ``scan()`` does not come through here; it reads
+        # via ``_df_pruned``, which declares the schema and chooses the
+        # partitions itself, so planning it launches no Spark job.
         p = os.path.join(self.path, "parquet")
         evolved = bool(self._meta.added_defaults
                        or self._meta.dropped_columns)
@@ -2110,37 +2109,64 @@ class Table:
         return self._apply_added_defaults(out) if evolved else out
 
     def _df_pruned(self, ts_bounds: tuple | None) -> DataFrame:
-        """Snapshot DataFrame with manifest-level data skipping (r18):
-        ``ts_bounds=(lo, hi)`` (either end None-able, nanos,
-        inclusive) prunes the FILE LIST itself by the per-file stats
-        every commit records — Spark then never even opens a footer
-        for a file outside the range.  Falls back to the plain
-        snapshot read when there is nothing to prune with; the caller
-        must still apply the row-level predicate (stats pruning is
-        file-granular).
+        """The read under ``scan()``, planned without a Spark job.
 
-        The read body mirrors ``df()``'s manifest branch VERBATIM
-        except for the pruned file list — keep them in sync (see the
-        comment in ``df()`` for why they are not one helper)."""
+        ``ts_bounds=(lo, hi)`` (either end None-able, nanos, inclusive)
+        narrows the inputs before Spark sees them, the way zdb picks
+        partitions from its own metadata (``src/table/scan.rs:67-74``):
+
+        - manifest tables keep the committed files whose recorded ts
+          stats overlap the range (``_prune_files_by_stats``);
+        - listing tables keep the ``dt=`` directories whose value lies
+          in ``[_dt_str_for(lo), _dt_str_for(hi)]`` (``_listed_paths``).
+
+        Every read declares ``_read_schema()``, so no footer is sampled
+        to infer one, and passes ``basePath`` so ``dt`` stays a
+        partition column and Spark's hidden-file rules still apply
+        inside each directory.  Pruning is file/directory granular: the
+        caller still applies the row-level predicate."""
         lo, hi = ts_bounds if ts_bounds is not None else (None, None)
-        if not self._meta.manifest or (lo is None and hi is None):
-            return self.df()
         p = os.path.join(self.path, "parquet")
-        evolved = bool(self._meta.added_defaults
-                       or self._meta.dropped_columns)
-        reader = self.spark.read
-        if evolved:
-            reader = reader.schema(self._read_schema())
-        _, head = self._latest_head()
-        files = self._prune_files_by_stats(
-            self._files_of_head(head), self._stats_of_head(head),
-            {self.schema.ts_col: (lo, hi)})
-        if not files:
-            return self.spark.createDataFrame(
-                [], self.schema.spark_schema().add("dt", "string"))
-        out = (reader.option("basePath", p)
-               .parquet(*[os.path.join(p, f) for f in files]))
-        return self._apply_added_defaults(out) if evolved else out
+        if self._meta.manifest:
+            _, head = self._latest_head()
+            files = self._files_of_head(head)
+            if lo is not None or hi is not None:
+                files = self._prune_files_by_stats(
+                    files, self._stats_of_head(head),
+                    {self.schema.ts_col: (lo, hi)})
+            paths = [os.path.join(p, f) for f in files]
+        else:
+            paths = self._listed_paths(p, lo, hi)
+        schema = self._read_schema()
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        out = (self.spark.read.schema(schema).option("basePath", p)
+               .parquet(*paths))
+        return self._apply_added_defaults(out)
+
+    def _listed_paths(self, root: str, lo, hi) -> list[str]:
+        """Read paths of a listing-mode table for ``[lo, hi]``: one
+        ``os.scandir`` of ``root`` keeps the ``dt=`` directories in
+        range, by the same string comparison ``scan()`` applies to
+        ``dt``.  The whole root is returned when there is nothing to
+        prune by (no bounds, or no date partitioning) and when a raw
+        ``stream_writer`` sink feeds the table: its ``_spark_metadata``
+        log, not the directory tree, is then the file list, and Spark
+        honours it only on a root read."""
+        if not os.path.isdir(root):
+            return []
+        fmt = self.schema.partition_by.date_format
+        if (fmt is None or (lo is None and hi is None)
+                or os.path.isdir(os.path.join(root, "_spark_metadata"))):
+            return [root]
+        dt_lo = _dt_str_for(lo, fmt) if lo is not None else None
+        dt_hi = _dt_str_for(hi, fmt) if hi is not None else None
+        with os.scandir(root) as entries:
+            return sorted(
+                e.path for e in entries
+                if e.name.startswith("dt=") and e.is_dir()
+                and (dt_lo is None or e.name[3:] >= dt_lo)
+                and (dt_hi is None or e.name[3:] <= dt_hi))
 
     def add_column(self, name: str, col_type: ColumnType,
                    default=None) -> None:
@@ -2557,7 +2583,7 @@ class Table:
         col = self.schema.column(column)
         if not col.is_symbol:
             raise ValueError(f"column {column!r} is not a symbol column")
-        rows = (self.df().select(column).distinct()
+        rows = (self.scan(columns=[column]).distinct()
                 .orderBy(column).collect())
         return [r[0] for r in rows]
 
