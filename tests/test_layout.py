@@ -340,6 +340,7 @@ class TestTableZorder:
         # compaction re-clusters on the same curve (files merge into
         # bigger rectangles, admission stays partial)
         tz.compact(target_file_mb=1)
+        tz.vacuum(grace_seconds=0)  # superseded files stay until vacuum
         z_adm2, z_tot2 = files_admitted(os.path.join(tz.path, "parquet"))
         assert z_adm2 <= max(1, z_tot2 // 2), (z_adm2, z_tot2)
 

@@ -50,7 +50,7 @@ class TestStreamWriter:
         assert spark.read.parquet(out).count() == 60
 
 
-def _tick_table(spark, tmp_path, name="ticks", manifest=True):
+def _tick_table(spark, tmp_path, name="ticks"):
     from zdb_spark.schema import ColumnType, PartitionBy, Schema
     from zdb_spark.table import Table
 
@@ -59,8 +59,7 @@ def _tick_table(spark, tmp_path, name="ticks", manifest=True):
               .add_col("price", ColumnType.F64)
               .add_col("user_id", ColumnType.I64)
               .with_partition_by(PartitionBy.DAY))
-    return Table.create(spark, schema, home=str(tmp_path / "home"),
-                        manifest=manifest)
+    return Table.create(spark, schema, home=str(tmp_path / "home"))
 
 
 class TestStreamWriterTable:
@@ -329,7 +328,7 @@ class TestRollupSink:
                   .add_col("sum_price", ColumnType.F64)
                   .with_partition_by(PartitionBy.DAY))
         return Table.create(spark, schema,
-                            home=str(tmp_path / "rhome"), manifest=True)
+                            home=str(tmp_path / "rhome"))
 
     def test_partial_merge_equals_direct_aggregate(self, spark, tmp_path):
         from zdb_spark.streaming.ingest import read_rollup, rollup_sink

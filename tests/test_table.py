@@ -123,8 +123,7 @@ class TestConcurrentAppend:
 
 class TestManifest:
     def make(self, spark, tmp_home):
-        return Table.create(spark, make_schema("tman"), home=tmp_home,
-                            manifest=True)
+        return Table.create(spark, make_schema("tman"), home=tmp_home)
 
     def test_threaded_manifest_appends_compose(self, spark, tmp_home):
         import threading
@@ -399,45 +398,180 @@ class TestManifest:
         assert not os.path.exists(orphan)
         assert t.scan().count() == 1
 
-    def test_stale_lock_is_stolen(self, spark, tmp_home):
-        # a crashed writer's leftover lock must not block appends forever
-        import os
 
-        t = Table.create(spark, make_schema("stale"), home=tmp_home)
-        lock = os.path.join(t.path, "_meta.lock")
-        with open(lock, "w") as f:
-            f.write("99999 0")
-        old = 1_000_000.0
-        os.utime(lock, (old, old))  # epoch-ancient ⇒ stale
-        t.write(rows_df(spark, [T0]))  # steals the lock and proceeds
-        assert t.row_count == 1
-        assert not os.path.exists(lock)
 
-    def test_fresh_lock_blocks_until_timeout(self, spark, tmp_home):
-        import os
+def _legacy_table(spark, home, name="leg"):
+    """A table as the retired directory-listing protocol left it: part
+    files under ``parquet/dt=*/``, no ``_manifest/``, and a sidecar with
+    ``"manifest": false`` carrying row stats, txn marks and a CHECK."""
+    import json
+    import shutil
 
-        t = Table.create(spark, make_schema("fresh"), home=tmp_home)
-        lock = os.path.join(t.path, "_meta.lock")
-        with open(lock, "w") as f:
-            f.write(f"{os.getpid()} now")
-        with pytest.raises(TimeoutError):
-            with t._meta_lock(timeout_s=0.3):
-                pass
-        os.unlink(lock)
+    t = Table.create(spark, make_schema(name), home=home)
+    ts = [T0 + d * DAY + i for d in range(3) for i in range(4)]
+    t.write(rows_df(spark, ts))
+    shutil.rmtree(t._manifest_dir())
+    with open(os.path.join(t.path, "_meta")) as f:
+        meta = json.load(f)
+    meta.update(manifest=False, row_count=len(ts), min_ts=min(ts),
+                max_ts=max(ts), txns={"app": 3},
+                checks={"price_pos": "price > 0"})
+    with open(os.path.join(t.path, "_meta"), "w") as f:
+        json.dump(meta, f)
+    return t.path, sorted(ts)
 
-    def test_manifest_required_for_snapshot_api(self, spark, tmp_home):
-        t = Table.create(spark, make_schema("plain"), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest=True"):
-            t.snapshot(1)
-        with pytest.raises(ValueError, match="manifest=True"):
-            t.vacuum()
 
-    def test_reopen_preserves_manifest_mode(self, spark, tmp_home):
-        t = self.make(spark, tmp_home)
-        t.write(rows_df(spark, [T0]))
-        t2 = Table.open(spark, "tman", home=tmp_home)
-        assert t2._meta.manifest is True
-        assert t2.scan().count() == 1
+class TestSingleProtocol:
+    """Every table commits through the manifest head: legacy listing
+    tables are bootstrapped once, uncommitted files stay invisible, and
+    schema changes are CAS commits that concurrent writers cannot lose
+    or ignore."""
+
+    def test_legacy_listing_table_opens_as_v1(self, spark, tmp_home):
+        import json
+
+        path, ts = _legacy_table(spark, tmp_home)
+        t = Table.open(spark, "leg", home=tmp_home)
+        assert t._latest_head()[0] == 1
+        assert sorted(r.ts for r in t.scan().collect()) == ts
+        assert t.row_count == len(ts)
+        assert (t.get_first_ts(), t.get_last_ts()) == (ts[0], ts[-1])
+        assert t._last_txn("app") == 3
+        # the sidecar's CHECK came over with the schema metadata
+        assert t._meta.checks == {"price_pos": "price > 0"}
+        with pytest.raises(ValueError, match="price_pos"):
+            t.write(rows_df(spark, [T0 + 5 * DAY], price=-1.0))
+        # a replayed streaming batch commits nothing
+        late = rows_df(spark, [T0 + 5 * DAY])
+        assert t.write(late, txn=("app", 3)) == 0
+        assert t.write(late, txn=("app", 2)) == 0
+        assert t.write(late, txn=("app", 4)) == 1
+        assert t.row_count == len(ts) + 1
+        # bootstrapped once: the legacy flag is gone, reopening is a read
+        with open(os.path.join(path, "_meta")) as f:
+            assert "manifest" not in json.load(f)
+        t2 = Table.open(spark, "leg", home=tmp_home)
+        assert t2._latest_head()[0] == 2
+        assert t2.scan().count() == len(ts) + 1
+
+    def test_concurrent_bootstrap_publishes_one_v1(self, spark, tmp_home):
+        import threading
+
+        path, ts = _legacy_table(spark, tmp_home)
+        start = threading.Barrier(4)
+        handles, errs = [], []
+
+        def opener():
+            try:
+                start.wait()
+                handles.append(Table.open(spark, "leg", home=tmp_home))
+            except Exception as e:  # pragma: no cover
+                errs.append(e)
+
+        threads = [threading.Thread(target=opener) for _ in range(4)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(300)
+            assert not th.is_alive()
+        assert not errs
+        md = os.path.join(path, "_manifest")
+        assert sorted(f for f in os.listdir(md) if not f.startswith(
+            "seg-")) == ["v000000000001.json"]
+        for h in handles:
+            assert h.row_count == len(ts)
+            assert h._last_txn("app") == 3
+        assert handles[0].scan().count() == len(ts)
+
+    def test_uncommitted_part_files_are_not_read(self, spark, tmp_home):
+        import glob
+        import shutil
+
+        t = Table.create(spark, make_schema("stray"), home=tmp_home)
+        t.write(rows_df(spark, [T0 + i * DAY for i in range(3)]))
+        # a crash between moving a batch and committing it leaves a
+        # part file in an in-range day directory
+        part = glob.glob(os.path.join(t.path, "parquet", "dt=2024-01-02",
+                                      "part-*.parquet"))[0]
+        shutil.copy(part, os.path.join(os.path.dirname(part),
+                                       "part-99999-stray.parquet"))
+        assert t.scan(T0 + DAY, T0 + 2 * DAY - 1).count() == 1
+        assert Table.open(spark, "stray", home=tmp_home).scan().count() == 3
+        # the same state on a table that never committed: files, no head
+        Table.create(spark, make_schema("fresh"), home=tmp_home)
+        day = os.path.join(tmp_home, "data", "fresh", "parquet",
+                           "dt=2024-01-02")
+        os.makedirs(day)
+        shutil.copy(part, os.path.join(day, os.path.basename(part)))
+        t2 = Table.open(spark, "fresh", home=tmp_home)
+        assert t2._latest_head()[0] == 0
+        assert t2.row_count == 0 and t2.scan().count() == 0
+
+    def test_add_column_racing_appends_loses_nothing(self, spark,
+                                                     tmp_home):
+        import threading
+
+        Table.create(spark, make_schema("race"), home=tmp_home)
+        writers = [Table.open(spark, "race", home=tmp_home)
+                   for _ in range(3)]
+        evolver = Table.open(spark, "race", home=tmp_home)
+        start = threading.Barrier(4)
+        errs = []
+
+        def append(t, w):
+            try:
+                start.wait()
+                for b in range(2):
+                    t.write(rows_df(spark, [T0 + (w * 2 + b) * DAY + i
+                                            for i in range(5)]),
+                            enforce_order=False)
+            except Exception as e:  # pragma: no cover
+                errs.append(e)
+
+        def evolve():
+            try:
+                start.wait()
+                evolver.add_column("venue", ColumnType.SYMBOL8,
+                                   default="UNK")
+                evolver.add_column("fee", ColumnType.F64)
+            except Exception as e:  # pragma: no cover
+                errs.append(e)
+
+        threads = ([threading.Thread(target=append, args=(t, w))
+                    for w, t in enumerate(writers)]
+                   + [threading.Thread(target=evolve)])
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(300)
+            assert not th.is_alive()
+        assert not errs
+        t = Table.open(spark, "race", home=tmp_home)
+        assert [c.name for c in t.schema.columns][-2:] == ["venue", "fee"]
+        assert t._meta.added_defaults == {"venue": "UNK", "fee": None}
+        assert t.row_count == 30
+        rows = t.scan().collect()
+        assert len(rows) == 30
+        assert {r.venue for r in rows} == {"UNK"}
+
+    def test_check_added_elsewhere_binds_open_handle(self, spark,
+                                                     tmp_home):
+        Table.create(spark, make_schema("ck"), home=tmp_home)
+        b = Table.open(spark, "ck", home=tmp_home)  # opened before the check
+        a = Table.open(spark, "ck", home=tmp_home)
+        a.write(rows_df(spark, [T0]))
+        a.add_check("price_pos", "price > 0")
+        with pytest.raises(ValueError, match="price_pos"):
+            b.write(rows_df(spark, [T0 + 1], price=-5.0))
+        assert b.row_count == 1
+        assert b.write(rows_df(spark, [T0 + 2])) == 1
+        # checks changed between a batch's validation and its commit:
+        # the commit refuses and publishes nothing
+        v = b._latest_head()[0]
+        with pytest.raises(RuntimeError, match="CHECK constraints"):
+            b._commit_append_manifest(["dt=2024-01-01/x.parquet"], 1,
+                                      T0 + 3, T0 + 3, None, None, {})
+        assert b._latest_head()[0] == v
 
 
 class TestScan:
@@ -496,9 +630,9 @@ HOUR = 3_600 * NS
 
 @pytest.fixture(scope="module")
 def days40_home(spark, tmp_path_factory):
-    """A listing-mode table of 40 day partitions, 3 ticks a day (hours
-    0, 11 and 23), more days than Spark's default parallel-listing
-    threshold of 32."""
+    """A table of 40 day partitions, 3 ticks a day (hours 0, 11 and
+    23): more files than Spark's default parallel-listing threshold of
+    32."""
     home = str(tmp_path_factory.mktemp("days40") / "zdb_home")
     t = Table.create(spark, make_schema("d40"), home=home)
     t.write(spark.createDataFrame(
@@ -526,9 +660,9 @@ def _spark_jobs(spark, fn):
 
 
 class TestScanPlanning:
-    """``Table.scan`` on a listing table chooses its ``dt`` directories
-    on the driver and reads them with the declared schema, so building
-    the scan launches no Spark job."""
+    """``Table.scan`` chooses its files from the manifest head's ts
+    stats on the driver and reads them with the declared schema, so
+    building the scan launches no Spark job."""
 
     COLS = ["ts", "sym", "price", "size"]
 
@@ -628,36 +762,6 @@ class TestScanPlanning:
                        "UNK", T0 + 39 * DAY + 23 * HOUR: "UNK",
                        T0 + 40 * DAY: "XNAS"}
 
-    def test_stream_sink_log_is_the_file_list(self, spark, tmp_home,
-                                              tmp_path):
-        """A table fed by the raw ``stream_writer`` sink is read through
-        the sink's ``_spark_metadata`` log: a parquet file in a day
-        directory that the log never committed is not read."""
-        import shutil
-
-        from zdb_spark.streaming.ingest import stream_writer
-
-        src = str(tmp_path / "src")
-        src_schema = "ts long, sym string, price double, size long"
-        spark.createDataFrame(
-            [(T0 + i * 8 * HOUR, "S", float(i), i) for i in range(9)],
-            src_schema).write.parquet(src)
-        t = Table.create(spark, make_schema("ss"), home=tmp_home)
-        root = os.path.join(t.path, "parquet")
-        q = stream_writer(spark.readStream.schema(src_schema).parquet(src),
-                          root, str(tmp_path / "ckpt"))
-        q.awaitTermination(120)
-        assert os.path.isdir(os.path.join(root, "_spark_metadata"))
-        day = os.path.join(root, "dt=2024-01-02")
-        part = next(os.path.join(day, f) for f in os.listdir(day)
-                    if f.startswith("part-"))
-        shutil.copy(part, os.path.join(day, "part-99999-stray.parquet"))
-        df, jobs = _spark_jobs(spark, lambda: t.scan(T0 + DAY,
-                                                     T0 + 2 * DAY - 1))
-        assert jobs == []
-        assert sorted(r.price for r in df.collect()) == [3.0, 4.0, 5.0]
-        assert t.scan().count() == 9
-
 
 class TestCompaction:
     def test_compact_merges_small_files(self, spark, tmp_home):
@@ -671,6 +775,7 @@ class TestCompaction:
                                             "*.parquet"))
         assert len(part_files) >= 5
         assert t.compact() == 1
+        t.vacuum(grace_seconds=0)     # superseded files stay until vacuum
         part_files = glob.glob(os.path.join(t.path, "parquet", "dt=*",
                                             "*.parquet"))
         assert len(part_files) == 1
@@ -694,6 +799,7 @@ class TestCompaction:
              for i in range(80_000)])
         t.write(df)
         t.compact(target_file_mb=1)  # tiny target → must split
+        t.vacuum(grace_seconds=0)     # superseded files stay until vacuum
         hot = glob.glob(os.path.join(
             t.path, "parquet", "dt=2024-01-01", "*.parquet"))
         assert len(hot) >= 2
@@ -870,8 +976,7 @@ class TestChunkedManifest:
     segment list is bounded too."""
 
     def make(self, spark, tmp_home):
-        return Table.create(spark, make_schema("tchunk"), home=tmp_home,
-                            manifest=True)
+        return Table.create(spark, make_schema("tchunk"), home=tmp_home)
 
     def drive_appends(self, t, total_files, batch=50):
         # Drive the commit protocol directly with synthetic file names —
@@ -1049,8 +1154,7 @@ class TestSchemaEvolution:
         t.add_column("ratio", ColumnType.F64, default=1)  # int ok for float
 
     def test_add_column_manifest_table(self, spark, tmp_home):
-        t = Table.create(spark, make_schema("tm"), home=tmp_home,
-                         manifest=True)
+        t = Table.create(spark, make_schema("tm"), home=tmp_home)
         t.write(rows_df(spark, [T0]))
         t.add_column("venue", ColumnType.SYMBOL8, default="UNK")
         t.write(spark.createDataFrame(
@@ -1108,6 +1212,7 @@ class TestDropColumn:
         assert got == {T0: "UNK", T0 + 1: "NYSE"}
         # and the default is now MATERIALIZED in the physical files
         import glob
+        t.vacuum(grace_seconds=0)     # superseded files stay until vacuum
         files = glob.glob(f"{t.path}/parquet/dt=*/*.parquet")
         raw = spark.read.parquet(*files)
         assert "venue" in raw.columns
@@ -1126,6 +1231,7 @@ class TestDropColumn:
         t.write(rows_df(spark, [T0 + 1]).withColumn("venue", F.lit("X")))
         t.drop_column("venue")
         t.compact()
+        t.vacuum(grace_seconds=0)     # superseded files stay until vacuum
         import glob
         files = glob.glob(f"{t.path}/parquet/dt=*/*.parquet")
         raw = spark.read.parquet(*files)
@@ -1139,13 +1245,7 @@ class TestDeleteWhere:
     time travel, loud abort on rewrite races."""
 
     def make(self, spark, tmp_home, name="tdel"):
-        return Table.create(spark, make_schema(name), home=tmp_home,
-                            manifest=True)
-
-    def test_requires_manifest(self, spark, tmp_home):
-        t = Table.create(spark, make_schema(), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest=True"):
-            t.delete_where("price > 0")
+        return Table.create(spark, make_schema(name), home=tmp_home)
 
     def test_delete_rows_and_row_count(self, spark, tmp_home):
         t = self.make(spark, tmp_home)
@@ -1205,8 +1305,7 @@ class TestDeleteWhere:
 
         real = os.path.join(tmp_home, "real")
         os.makedirs(real)
-        t = Table.create(spark, make_schema("tsym"), home=real,
-                         manifest=True)
+        t = Table.create(spark, make_schema("tsym"), home=real)
         t.write(rows_df(spark, [T0 + i for i in range(6)]))
         link = os.path.join(tmp_home, "link")
         os.symlink(real, link)
@@ -1294,7 +1393,7 @@ class TestDeleteWhere:
     def test_delete_on_zordered_table_keeps_clustering(self, spark,
                                                        tmp_home):
         sch = make_schema("tdelz")
-        t = Table.create(spark, sch, home=tmp_home, manifest=True,
+        t = Table.create(spark, sch, home=tmp_home,
                          zorder_by=["price"],
                          zorder_bounds={"price": (0.0, 100.0)})
         t.write(rows_df(spark, [T0 + i for i in range(20)]))
@@ -1310,8 +1409,7 @@ class TestUpdateWhere:
     machinery — affected-file rewrite, CAS flip, race abort."""
 
     def make(self, spark, tmp_home, name="tupd"):
-        return Table.create(spark, make_schema(name), home=tmp_home,
-                            manifest=True)
+        return Table.create(spark, make_schema(name), home=tmp_home)
 
     def test_update_assignments_and_isolation(self, spark, tmp_home):
         t = self.make(spark, tmp_home)
@@ -1366,8 +1464,7 @@ class TestMergeInto:
     delete/insert clauses, one atomic CAS flip for rewrites+inserts."""
 
     def make(self, spark, tmp_home, name="tmrg"):
-        return Table.create(spark, make_schema(name), home=tmp_home,
-                            manifest=True)
+        return Table.create(spark, make_schema(name), home=tmp_home)
 
     def src(self, spark, rows):
         # rows: list of (ts, sym, price, size)
@@ -1541,7 +1638,7 @@ class TestMergeInto:
 
     def test_zorder_layout_preserved(self, spark, tmp_home):
         t = Table.create(spark, make_schema("tmrgz"), home=tmp_home,
-                         manifest=True, zorder_by=["price"],
+                         zorder_by=["price"],
                          zorder_bounds={"price": (0.0, 1000.0)})
         t.write(rows_df(spark, [T0 + i for i in range(6)]))
         res = t.merge_into(
@@ -1552,12 +1649,6 @@ class TestMergeInto:
         assert got[T0 + 1] == 500.0 and got[T0 + 60] == 900.0
         assert "_zkey" not in t.scan().columns
 
-    def test_merge_requires_manifest(self, spark, tmp_home):
-        t = Table.create(spark, make_schema("tmrgl"), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest"):
-            t.merge_into(self.src(spark, [(T0, "A", 1.0, 1)]),
-                         on="ts")
-
 
 class TestChangesBetween:
     """Row-level CDC between snapshots (r17): derived from the COW
@@ -1566,8 +1657,7 @@ class TestChangesBetween:
     cancels rows that merely moved during a rewrite."""
 
     def make(self, spark, tmp_home, name="tcdc"):
-        return Table.create(spark, make_schema(name), home=tmp_home,
-                            manifest=True)
+        return Table.create(spark, make_schema(name), home=tmp_home)
 
     @staticmethod
     def feed(t, v0, v1=None):
@@ -1689,9 +1779,6 @@ class TestChangesBetween:
         t.vacuum(grace_seconds=0.0)
         with pytest.raises(ValueError, match="no snapshot"):
             t.changes_between(v)          # vacuumed away
-        tl = Table.create(spark, make_schema("tcdcl"), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest"):
-            tl.changes_between(0)
 
 
 class TestMaintenanceStress:
@@ -1710,8 +1797,7 @@ class TestMaintenanceStress:
         import os
         import threading
 
-        Table.create(spark, make_schema(), home=tmp_home,
-                     manifest=True)
+        Table.create(spark, make_schema(), home=tmp_home)
         t0 = Table.open(spark, "t1", home=tmp_home)
         # seed: prices 1..40 on day 0 (4 files of 10) — the delete
         # target corpus; appends land on later days, outside every
@@ -1799,8 +1885,7 @@ class TestCompactRewriteRace:
     delete_where's own abort)."""
 
     def test_compact_aborts_when_delete_wins(self, spark, tmp_home):
-        t = Table.create(spark, make_schema("tcr"), home=tmp_home,
-                         manifest=True)
+        t = Table.create(spark, make_schema("tcr"), home=tmp_home)
         t.write(rows_df(spark, [T0 + i for i in range(6)]))
         orig = t._commit_manifest
 
@@ -1832,7 +1917,7 @@ class TestFileStats:
 
     def make(self, spark, tmp_home, name="tfs", **kw):
         return Table.create(spark, make_schema(name), home=tmp_home,
-                            manifest=True, **kw)
+                            **kw)
 
     def test_append_records_ts_stats(self, spark, tmp_home):
         t = self.make(spark, tmp_home)
@@ -1898,7 +1983,7 @@ class TestFileStats:
                .add_col("user_id", ColumnType.I64)
                .add_col("price", ColumnType.F64)
                .with_partition_by(PartitionBy.DAY))
-        t = Table.create(spark, sch, home=tmp_home, manifest=True,
+        t = Table.create(spark, sch, home=tmp_home,
                          zorder_by=["user_id"],
                          zorder_bounds={"user_id": (0.0, 1000.0)})
         df = spark.createDataFrame(
@@ -1974,8 +2059,7 @@ class TestChangeFeedConsumer:
     def test_feed_driven_catchup_equals_rescan(self, spark, tmp_home):
         from zdb_spark.streaming.ingest import read_rollup
 
-        t = Table.create(spark, make_schema("tcfc"), home=tmp_home,
-                         manifest=True)
+        t = Table.create(spark, make_schema("tcfc"), home=tmp_home)
         t.write(rows_df(spark, [T0 + i for i in range(6)]))
         v0 = t._latest_head()[0]
 
@@ -1987,7 +2071,7 @@ class TestChangeFeedConsumer:
                 .add_col("n_rows", ColumnType.I64)
                 .add_col("sum_price", ColumnType.F64)
                 .with_partition_by(PartitionBy.DAY))
-        r = Table.create(spark, rsch, home=tmp_home, manifest=True)
+        r = Table.create(spark, rsch, home=tmp_home)
         base = (t.snapshot(v0).groupBy("sym")
                 .agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
                      F.sum("price").alias("sum_price"))
@@ -2031,8 +2115,7 @@ class TestMergeDiscoverySkipping:
 
     def test_ts_keyed_merge_touches_only_in_range_files(self, spark,
                                                         tmp_home):
-        t = Table.create(spark, make_schema("tmds"), home=tmp_home,
-                         manifest=True)
+        t = Table.create(spark, make_schema("tmds"), home=tmp_home)
         for d in range(4):
             t.write(rows_df(spark, [T0 + d * DAY], price=float(d)))
         _, before = t._latest_manifest()
@@ -2063,7 +2146,7 @@ class TestReviewFixesR18:
                .add_col("user_id", ColumnType.I64)
                .add_col("price", ColumnType.F64)
                .with_partition_by(PartitionBy.DAY))
-        t = Table.create(spark, sch, home=tmp_home, manifest=True,
+        t = Table.create(spark, sch, home=tmp_home,
                          zorder_by=["user_id"],
                          zorder_bounds={"user_id": (0.0, 1000.0)})
         t.write(spark.createDataFrame(
@@ -2082,7 +2165,7 @@ class TestReviewFixesR18:
                                   .add_col("user_id", ColumnType.I64)
                                   .add_col("price", ColumnType.F64)
                                   .with_partition_by(PartitionBy.DAY)),
-                          home=tmp_home, manifest=True,
+                          home=tmp_home,
                           zorder_by=["user_id"],
                           zorder_bounds={"user_id": (0.0, 1000.0)})
         t2.write(spark.createDataFrame(
@@ -2094,8 +2177,7 @@ class TestReviewFixesR18:
         assert [r.user_id for r in t2.scan().collect()] == [5]
 
     def test_merge_rejects_null_ts_inserts(self, spark, tmp_home):
-        t = Table.create(spark, make_schema("tnti"), home=tmp_home,
-                         manifest=True)
+        t = Table.create(spark, make_schema("tnti"), home=tmp_home)
         t.write(rows_df(spark, [T0]))
         src = spark.createDataFrame(
             [Row(ts=None, sym="N", price=9.0, size=1),
@@ -2108,8 +2190,7 @@ class TestReviewFixesR18:
 
     def test_head_cache_not_aliased_through_fstats(self, spark,
                                                    tmp_home):
-        t = Table.create(spark, make_schema("thal"), home=tmp_home,
-                         manifest=True)
+        t = Table.create(spark, make_schema("thal"), home=tmp_home)
         t.write(rows_df(spark, [T0]))
         v, head = t._latest_head()
         head["fstats"]["bogus/file"] = [1, {}, {}]
@@ -2144,7 +2225,7 @@ class TestChangeFeedDedupStore:
                .add_col("doc_id", ColumnType.I64)
                .add_col("text", ColumnType.SYMBOL32)
                .with_partition_by(PartitionBy.DAY))
-        t = Table.create(spark, sch, home=tmp_home, manifest=True)
+        t = Table.create(spark, sch, home=tmp_home)
         base = [
             (1, "The quick brown fox jumps over the lazy dog"),
             (2, "Completely different content about databases"),
@@ -2190,8 +2271,7 @@ class TestCheckConstraints:
     same write path, MERGE writes, UPDATE rewrites); NULL passes."""
 
     def make(self, spark, tmp_home, name="tchk"):
-        return Table.create(spark, make_schema(name), home=tmp_home,
-                            manifest=True)
+        return Table.create(spark, make_schema(name), home=tmp_home)
 
     def test_add_validate_write_refusal_and_drop(self, spark,
                                                  tmp_home):
@@ -2264,8 +2344,7 @@ class TestDescribeFiles:
                                                        tmp_home):
         import json as _json
 
-        t = Table.create(spark, make_schema("tdf"), home=tmp_home,
-                         manifest=True)
+        t = Table.create(spark, make_schema("tdf"), home=tmp_home)
         t.write(rows_df(spark, [T0, T0 + 5]))
         t.write(rows_df(spark, [T0 + DAY]))
         d = {r.file: r for r in t.describe_files().collect()}
@@ -2288,6 +2367,3 @@ class TestDescribeFiles:
         d2 = t2.describe_files().collect()
         assert len(d2) == 2
         assert all(r.rows is None and r.ts_min is None for r in d2)
-        tl = Table.create(spark, make_schema("tdfl"), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest"):
-            tl.describe_files()

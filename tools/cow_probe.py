@@ -57,7 +57,7 @@ def run_point(spark, sf_dir: str, layout: str) -> dict:
         zkw = {"zorder_by": ["user_id"],
                "zorder_bounds": {"user_id": (float(lo),
                                              float(hi) + 1.0)}}
-    t = Table.create(spark, schema, home=home, manifest=True, **zkw)
+    t = Table.create(spark, schema, home=home, **zkw)
     t0 = time.time()
     t.write(ev, enforce_order=False)
     build = time.time() - t0

@@ -56,7 +56,7 @@ def run_point(spark, sf_dir: str) -> list[dict]:
               .with_partition_by(PartitionBy.DAY))
     ev = (entry._load(spark, sf_dir, "events")
           .select("ts", "event_id", "user_id", "value"))
-    t = Table.create(spark, schema, home=home, manifest=True)
+    t = Table.create(spark, schema, home=home)
     t.write(ev, enforce_order=False)
     _, files = t._latest_manifest()
     lo = int(t.get_first_ts())

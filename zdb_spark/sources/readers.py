@@ -12,15 +12,13 @@ add the reference's one real migration utility.
   monotonic-append check).
 - ``rows`` — the put_*/write() analogue for small programmatic appends.
 - ``stream_source`` — Structured Streaming file source factory with the
-  table's schema (pairs with streaming.ingest.stream_writer).
+  table's schema (pairs with streaming.ingest.stream_writer_table).
 - ``convert_column_type`` — port of scripts/convert_col.jl:1-61 (offline
   column type migration): rewrite a table's parquet with one column cast
   to a new type.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -94,7 +92,7 @@ def rows(table: Table, data: list[tuple]) -> int:
 def stream_source(spark: SparkSession, table: Table, path: str,
                   fmt: str = "parquet", **options) -> DataFrame:
     """File-based streaming source with the table's schema; feed to
-    streaming.ingest.stream_writer for the ordered-append sink."""
+    streaming.ingest.stream_writer_table for the table sink."""
     return (spark.readStream.format(fmt).options(**options)
             .schema(table.schema.spark_schema())
             .load(path))
@@ -103,9 +101,10 @@ def stream_source(spark: SparkSession, table: Table, path: str,
 def convert_column_type(spark: SparkSession, name: str, column: str,
                         to_type: ColumnType, home: str | None = None) -> None:
     """Offline column type migration (scripts/convert_col.jl:1-61): read
-    every partition, cast ``column``, rewrite parquet, update the schema
-    sidecar.  Writes to a temp dir then swaps, so a failure mid-rewrite
-    leaves the original intact."""
+    every committed file, cast ``column``, and write the result alongside
+    the old files; one manifest CAS then swaps the file list and the
+    schema together, so a failure mid-rewrite leaves the table as it
+    was.  The superseded files stay until ``Table.vacuum()``."""
     from pyspark.sql import functions as F
 
     t = Table.open(spark, name, home)
@@ -113,7 +112,7 @@ def convert_column_type(spark: SparkSession, name: str, column: str,
     if column == t.schema.ts_col:
         # Schema.__post_init__ would inject a fresh TIMESTAMP column 0
         # next to the converted one — two columns named ts, a corrupted
-        # sidecar, and a permanently broken table.  The reference's
+        # schema, and a permanently broken table.  The reference's
         # converter has the same restriction implicitly (ts IS the
         # partition/order key).
         raise ValueError(
@@ -128,10 +127,10 @@ def convert_column_type(spark: SparkSession, name: str, column: str,
                         strict_u64=t.schema.strict_u64,
                         partition_dirs=list(t.schema.partition_dirs))
 
-    src = os.path.join(t.path, "parquet")
-    tmp = os.path.join(t.path, "parquet.migrating")
-    if os.path.exists(src):
-        df = t.df().withColumn(
+    src, base_files, read_files, _ = t._cow_read()
+    moved: list[str] = []
+    if base_files:
+        df = read_files(base_files).withColumn(
             column,
             F.col(column).cast(new_schema.column(column)
                                .spark_type(new_schema.strict_u64)))
@@ -140,33 +139,14 @@ def convert_column_type(spark: SparkSession, name: str, column: str,
         # the partition column (destroying the within-file ts order the
         # row-group pruning relies on), and hash-repartition on dt alone
         # funnels each whole day through ONE task.  Range-partition on
-        # (dt, ts) like the write path, and keep the table's pinned
-        # parquet codec — this rewrite touches 100% of the files, the
-        # worst place to silently flip compression.
-        writer = (df.repartitionByRange("dt", t.schema.ts_col)
-                    .sortWithinPartitions("dt", t.schema.ts_col)
-                    .write.mode("overwrite"))
-        if t._meta.compression:
-            writer = writer.option("compression", t._meta.compression)
-        writer.partitionBy("dt").parquet(tmp)
-        backup = src + ".old"
-        os.rename(src, backup)
-        os.rename(tmp, src)
-        import shutil
-        shutil.rmtree(backup)
-        if t._meta.manifest:
-            # the rewrite replaced every file; publish a fresh snapshot
-            # so manifest reads see the migrated tree.  (Migration is an
-            # OFFLINE operation — concurrent readers of older snapshots
-            # are not supported across it, unlike compact().)
-            files = [
-                f"{dt}/{f}" for dt in os.listdir(src)
-                if dt.startswith("dt=")
-                for f in os.listdir(os.path.join(src, dt))
-                if not f.startswith(("_", "."))
-            ]
-            t._commit_manifest(lambda doc: {**doc, "files": sorted(files)})
-
-    t.schema = new_schema
-    t._meta.schema = new_schema.to_dict()
+        # (dt, ts) like the write path; the landing keeps the table's
+        # pinned parquet codec — this rewrite touches 100% of the files,
+        # the worst place to silently flip compression.
+        moved = t._stage_and_land(
+            df.repartitionByRange("dt", t.schema.ts_col)
+              .sortWithinPartitions("dt", t.schema.ts_col)
+              .write.mode("overwrite"))
+    t._flip_replacing(set(base_files), moved, src, "convert_column_type",
+                      meta={"schema": new_schema.to_dict()})
+    t._use_head_meta(t._latest_head()[1])
     t._flush_meta()

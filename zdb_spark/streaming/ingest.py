@@ -11,7 +11,10 @@ policy SURVEY.md §7 calls for where zdb simply panicked).
 
 Pieces:
 - ``stream_writer``  — readStream → derive dt → partitionBy(dt) Parquet
-  append sink with checkpoint (exactly-once file sink).
+  append sink with checkpoint (exactly-once file sink) for a plain
+  dataset directory.
+- ``stream_writer_table`` — the same stream into a ``Table``, one
+  manifest commit per micro-batch.
 - ``stream_resample`` — windowed OHLCV aggregation with watermark: the
   streaming version of ohlcv.resample (same operator; BASELINE.json's
   stated approach).
@@ -48,32 +51,50 @@ def _default_app_id(checkpoint: str) -> str:
             + hashlib.md5(norm.encode()).hexdigest()[:8])
 
 
-def stream_writer(stream_df: DataFrame, path: str, checkpoint: str,
-                  ts_col: str = "ts",
-                  partition_by: PartitionBy = PartitionBy.DAY,
-                  ts_is_nanos: bool = True,
-                  trigger_seconds: int | None = None):
-    """Append-mode Parquet sink partitioned by derived ``dt``.
-
-    The checkpoint gives exactly-once semantics over the file sink — the
-    streaming stand-in for zdb's flush/truncate durability step
-    (/root/reference/src/table/write.rs:212-234).  Returns the started
-    StreamingQuery.
-    """
-    ts_utc = nanos_to_ts(ts_col) if ts_is_nanos else F.col(ts_col)
-    fmt = partition_by.date_format
-    out = stream_df.withColumn(
-        "dt", F.date_format(ts_utc, fmt) if fmt else F.lit("all"))
-    writer = (out.writeStream.format("parquet")
-              .option("path", path)
-              .option("checkpointLocation", checkpoint)
-              .partitionBy("dt")
-              .outputMode("append"))
+def _start(writer, trigger_seconds: float | None):
+    """Start a ``DataStreamWriter``: every ``trigger_seconds`` when
+    given, else one ``availableNow`` drain of the input present now."""
     if trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     else:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _start_foreach_batch(stream_df: DataFrame, commit, checkpoint: str,
+                         trigger_seconds: float | None,
+                         output_mode: str = "update"):
+    """Start ``commit(batch_df, batch_id)`` as the checkpointed
+    ``foreachBatch`` sink of ``stream_df`` (see ``_start``)."""
+    return _start(stream_df.writeStream.foreachBatch(commit)
+                  .option("checkpointLocation", checkpoint)
+                  .outputMode(output_mode), trigger_seconds)
+
+
+def stream_writer(stream_df: DataFrame, path: str, checkpoint: str,
+                  ts_col: str = "ts",
+                  partition_by: PartitionBy = PartitionBy.DAY,
+                  ts_is_nanos: bool = True,
+                  trigger_seconds: int | None = None):
+    """Append-mode Parquet sink partitioned by derived ``dt``, for a
+    plain dataset directory at ``path``.
+
+    The checkpoint gives exactly-once semantics over the file sink — the
+    streaming stand-in for zdb's flush/truncate durability step
+    (/root/reference/src/table/write.rs:212-234).  It does not feed a
+    ``Table``: a table lists only files its manifest committed, and this
+    sink never commits to it — use ``stream_writer_table``.  Returns the
+    started StreamingQuery.
+    """
+    ts_utc = nanos_to_ts(ts_col) if ts_is_nanos else F.col(ts_col)
+    fmt = partition_by.date_format
+    out = stream_df.withColumn(
+        "dt", F.date_format(ts_utc, fmt) if fmt else F.lit("all"))
+    return _start(out.writeStream.format("parquet")
+                  .option("path", path)
+                  .option("checkpointLocation", checkpoint)
+                  .partitionBy("dt")
+                  .outputMode("append"), trigger_seconds)
 
 
 def stream_writer_table(stream_df: DataFrame, table, checkpoint: str,
@@ -84,12 +105,11 @@ def stream_writer_table(stream_df: DataFrame, table, checkpoint: str,
     ``foreachBatch`` → ``Table.write(txn=(app, batch_id))`` → manifest
     commit.
 
-    This is what unifies streaming with manifest-mode snapshot isolation:
-    the raw parquet file sink (``stream_writer``) drops files the
-    manifest log never hears about, so stream-fed tables used to be
-    restricted to directory-listing reads.  Routing each micro-batch
-    through ``Table.write`` instead means every batch stages, moves, and
-    commits exactly like a batch append — a concurrent reader sees
+    This is what unifies streaming with the manifest's snapshot
+    isolation: every micro-batch goes through ``Table.write``, so it
+    stages, moves, and commits exactly like a batch append (the raw
+    file sink, ``stream_writer``, drops files the manifest never hears
+    about, which no table read would see) — a concurrent reader sees
     whole batches or nothing, ``snapshot()``/time travel work over
     streamed data, and the (app_id, batch_id) txn recorded inside the
     manifest makes post-failure batch replays no-ops (foreachBatch is
@@ -109,14 +129,8 @@ def stream_writer_table(stream_df: DataFrame, table, checkpoint: str,
         table.write(batch_df, enforce_order=enforce_order,
                     txn=(app, int(batch_id)))
 
-    writer = (stream_df.writeStream.foreachBatch(commit)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("append"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, commit, checkpoint,
+                                trigger_seconds, output_mode="append")
 
 
 def stream_resample(stream_df: DataFrame, every: str,
@@ -303,14 +317,8 @@ def rollup_sink(stream_df: DataFrame, table, checkpoint: str,
                            *[f"sum_{c}" for c in sum_cols]))
         table.write(partial, enforce_order=False, txn=(app, int(batch_id)))
 
-    writer = (stream_df.writeStream.foreachBatch(commit)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("append"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, commit, checkpoint,
+                                trigger_seconds, output_mode="append")
 
 
 def read_rollup(table, group_cols: list[str],
@@ -398,14 +406,8 @@ def hll_sketch_sink(stream_df: DataFrame, value_col: str, store_path: str,
         append_hll_store(batch_df, value_col, store_path,
                          batch_id=f"epoch-{batch_id}")
 
-    writer = (stream_df.writeStream.foreachBatch(commit)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("update"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, commit, checkpoint,
+                                trigger_seconds)
 
 
 def countmin_sketch_sink(stream_df: DataFrame, value_col: str,
@@ -438,14 +440,8 @@ def countmin_sketch_sink(stream_df: DataFrame, value_col: str,
         append_countmin_store(batch_df, value_col, store_path,
                               batch_id=f"epoch-{batch_id}")
 
-    writer = (stream_df.writeStream.foreachBatch(commit)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("update"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, commit, checkpoint,
+                                trigger_seconds)
 
 
 def text_index_sink(stream_df: DataFrame, store_path: str,
@@ -470,14 +466,8 @@ def text_index_sink(stream_df: DataFrame, store_path: str,
         append_text_index(batch_df, store_path,
                           batch_id=f"epoch-{batch_id}")
 
-    writer = (stream_df.writeStream.foreachBatch(commit)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("update"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, commit, checkpoint,
+                                trigger_seconds)
 
 
 def kmv_sample_sink(stream_df: DataFrame, store_path: str,
@@ -499,14 +489,8 @@ def kmv_sample_sink(stream_df: DataFrame, store_path: str,
         append_kmv_store(batch_df, None, store_path,
                          batch_id=f"epoch-{batch_id}")
 
-    writer = (stream_df.writeStream.foreachBatch(commit)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("update"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, commit, checkpoint,
+                                trigger_seconds)
 
 
 def bloom_sketch_sink(stream_df: DataFrame, value_col: str,
@@ -527,14 +511,8 @@ def bloom_sketch_sink(stream_df: DataFrame, value_col: str,
         append_bloom_store(batch_df, value_col, store_path,
                            batch_id=f"epoch-{batch_id}")
 
-    writer = (stream_df.writeStream.foreachBatch(commit)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("update"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, commit, checkpoint,
+                                trigger_seconds)
 
 
 def sharded_bloom_sink(stream_df: DataFrame, value_col: str,
@@ -557,11 +535,5 @@ def sharded_bloom_sink(stream_df: DataFrame, value_col: str,
         append_sharded_bloom_store(batch_df, value_col, store_path,
                                    batch_id=f"epoch-{batch_id}")
 
-    writer = (stream_df.writeStream.foreachBatch(commit)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("update"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, commit, checkpoint,
+                                trigger_seconds)

@@ -34,7 +34,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -61,6 +60,11 @@ class OutOfOrderError(RuntimeError):
     (/root/reference/src/table/write.rs:79-84)."""
 
 
+class _ChecksChanged(RuntimeError):
+    """The CHECK constraints changed between a batch's validation and its
+    commit; the batch was not committed."""
+
+
 def zdb_home() -> str:
     """Root data dir, like $ZDB_HOME (/root/reference/src/lib.rs)."""
     return os.environ.get("ZDB_SPARK_HOME", os.path.join(os.getcwd(), "zdb_data"))
@@ -68,23 +72,27 @@ def zdb_home() -> str:
 
 @dataclass
 class _Meta:
-    """Sidecar `_meta` payload (/root/reference/src/table/meta.rs:25-37).
+    """Sidecar ``_meta`` payload, the zdb-parity table descriptor
+    (/root/reference/src/table/meta.rs:25-37).
 
-    ``manifest=True`` switches the table to snapshot-manifest reads:
-    scans list files from the latest ``_manifest/v*.json`` instead of the
-    directory tree, giving batch-level atomic visibility (a reader can
-    never observe a half-moved batch) — the property object stores need,
-    where staged renames are neither atomic nor instant.
+    Every commit goes through the manifest head (``_manifest/v*.json``,
+    published by CAS): the file list, row stats, streaming txn marks
+    and the mutable metadata (schema, ``added_defaults``,
+    ``dropped_columns``, ``checks``) flip there together.  This file
+    holds the create-time settings (``compression``, ``zorder``) and is
+    rewritten after each schema commit as a copy of the head's values;
+    a head published before any schema commit carries no metadata keys,
+    and then the values written here at create stand.  A sidecar with
+    ``"manifest": false`` marks a table written by the retired
+    directory-listing protocol, which ``Table.open`` bootstraps into the
+    manifest once.
     """
 
     schema: dict
     row_count: int = 0
     min_ts: int | None = None  # first ts ever written (nanos)
     max_ts: int | None = None  # last ts ever written (nanos)
-    manifest: bool = False
-    # last committed batch id per streaming writer app (listing-mode
-    # fallback; manifest mode records txns INSIDE the manifest json so
-    # the batch-id advance and the file-list flip are one atomic rename)
+    # last committed batch id per streaming writer app
     txns: dict = None
     # schema-evolution state: columns added AFTER data existed, mapped to
     # their read-time default (None → NULL), and columns dropped (their
@@ -128,7 +136,9 @@ class _Meta:
 
     @classmethod
     def from_json(cls, s: str) -> "_Meta":
-        return cls(**json.loads(s))
+        d = json.loads(s)
+        d.pop("manifest", None)  # the retired protocol flag
+        return cls(**d)
 
 
 _PARQUET_CODECS = {"snappy", "zstd", "gzip", "lz4", "brotli",
@@ -154,18 +164,17 @@ class Table:
 
     @classmethod
     def create(cls, spark: SparkSession, schema: Schema,
-               home: str | None = None, manifest: bool = False,
+               home: str | None = None,
                compression: str | None = None,
                zorder_by: list[str] | None = None,
                zorder_bits: int = 12,
                zorder_bounds: dict[str, tuple[float, float]] | None = None
                ) -> "Table":
-        """``manifest=True`` opts the table into snapshot-manifest reads
-        (see ``_Meta``).  Stream-fed manifest tables are supported via
-        ``streaming.ingest.stream_writer_table`` (foreachBatch →
-        ``write(txn=...)`` → manifest commit); the raw parquet file sink
-        (``stream_writer``) bypasses the manifest log and is for
-        listing-mode tables only.
+        """Create an empty table: the ``_meta`` sidecar only.  The first
+        commit (an append, or a schema change) publishes manifest v1;
+        every read lists files from the latest manifest head, so a
+        reader sees whole batches or nothing (see ``_Meta``).  Feed a
+        stream into it with ``streaming.ingest.stream_writer_table``.
 
         ``compression`` pins the table's parquet codec (zstd for cold
         archival tables, lz4/snappy for hot scan paths — the per-table
@@ -237,8 +246,8 @@ class Table:
         if os.path.exists(meta_path):
             raise TableExistsError(f"table {schema.name!r} already exists")
         os.makedirs(path, exist_ok=True)
-        meta = _Meta(schema=schema.to_dict(), manifest=manifest,
-                     compression=compression, zorder=zorder)
+        meta = _Meta(schema=schema.to_dict(), compression=compression,
+                     zorder=zorder)
         with open(meta_path, "w") as f:
             f.write(meta.to_json())
         return cls(spark, schema, path, meta)
@@ -251,8 +260,77 @@ class Table:
         if not os.path.exists(meta_path):
             raise TableNotFoundError(f"table {name!r} does not exist")
         with open(meta_path) as f:
-            meta = _Meta.from_json(f.read())
-        return cls(spark, Schema.from_dict(meta.schema), path, meta)
+            raw = f.read()
+        meta = _Meta.from_json(raw)
+        t = cls(spark, Schema.from_dict(meta.schema), path, meta)
+        v, head = t._latest_head()
+        if v == 0 and json.loads(raw).get("manifest") is False:
+            t._bootstrap_legacy()
+            v, head = t._latest_head()
+        t._use_head_meta(head)
+        return t
+
+    def _bootstrap_legacy(self) -> None:
+        """Publish v1 of a table written by the retired directory-listing
+        protocol (sidecar ``"manifest": false``, no manifest version):
+        every ``dt=*/`` part file becomes live, with its footer stats,
+        and the sidecar's row stats, txn marks and schema metadata carry
+        over.  Keyed on the legacy flag, never on "files but no head":
+        on a manifest table that state is a crash between moving a batch
+        and committing it, and those files must stay invisible.  Two
+        openers race on the v1 CAS; the loser's head is simply dropped
+        (both describe the same tree)."""
+        src = os.path.join(self.path, "parquet")
+        files = sorted(
+            f"{dt}/{f}" for dt in (os.listdir(src)
+                                   if os.path.isdir(src) else [])
+            if dt.startswith("dt=") and os.path.isdir(os.path.join(src, dt))
+            for f in os.listdir(os.path.join(src, dt))
+            if not f.startswith(("_", ".")))
+        m = self._meta
+        base = {"txns": dict(m.txns), "row_count": m.row_count,
+                "min_ts": m.min_ts, "max_ts": m.max_ts,
+                **self._head_meta({})}
+        head = self._head_from_files(files, base,
+                                     self._collect_file_stats(src, files))
+        if self._try_publish_manifest(1, head):
+            self._flush_meta()  # drops the legacy flag from the sidecar
+
+    # The mutable metadata a schema commit changes; it lives in the
+    # manifest head next to the file list.
+    _HEAD_META = ("schema", "added_defaults", "dropped_columns", "checks")
+
+    def _head_meta(self, head: dict) -> dict:
+        """A private copy of ``head``'s mutable metadata; a key the head
+        lacks (no schema commit yet) keeps the sidecar's value."""
+        import copy
+
+        return copy.deepcopy({k: head.get(k, getattr(self._meta, k))
+                              for k in self._HEAD_META})
+
+    def _use_head_meta(self, head: dict) -> None:
+        """Point this handle (schema, ``_meta``) at ``head``'s metadata
+        and row stats."""
+        for k, val in self._head_meta(head).items():
+            setattr(self._meta, k, val)
+        for k in ("row_count", "min_ts", "max_ts"):
+            setattr(self._meta, k, head[k])
+        self._meta.txns = dict(head["txns"])
+        self.schema = Schema.from_dict(self._meta.schema)
+
+    def _commit_meta(self, change) -> None:
+        """CAS-commit a schema change: ``change(meta)`` edits a copy of
+        the latest head's mutable metadata in place (raising refuses the
+        change), and the edited values publish as the next head.  The
+        handle and the ``_meta`` descriptor then follow the head."""
+        def upd(head: dict) -> dict:
+            meta = self._head_meta(head)
+            change(meta)
+            return {**head, **meta}
+
+        self._commit_manifest_head(upd)
+        self._use_head_meta(self._latest_head()[1])
+        self._flush_meta()
 
     @classmethod
     def create_or_open(cls, spark: SparkSession, schema: Schema,
@@ -286,9 +364,10 @@ class Table:
               cluster_by: list[str] | None = None,
               max_records_per_file: int | None = None,
               txn: tuple[str, int] | None = None) -> int:
-        """Append a batch. Validates schema, enforces the monotonic-append
-        invariant against recorded max_ts, derives ``dt``, sorts by ts
-        within files, appends Parquet, updates the sidecar.
+        """Append a batch. Validates schema and CHECK constraints,
+        enforces the monotonic-append invariant against recorded max_ts,
+        derives ``dt``, sorts by ts within files, lands Parquet files and
+        commits them with one CAS manifest publish.
 
         ``cluster_by`` prepends secondary sort columns (e.g. ``["sym"]``)
         ahead of ``ts`` inside each file: Parquet column stats then skip
@@ -303,11 +382,14 @@ class Table:
         (app, batch): a batch id ≤ the last committed id for that app is
         skipped (returns 0).  This is the streaming exactly-once hook —
         ``foreachBatch`` retries after a failure re-deliver the same
-        batch id, and in manifest mode the txn high-water mark is stored
-        INSIDE the manifest json, so the id advance and the file-list
-        flip commit in one atomic rename (the Delta txn-appId pattern).
-        Listing mode records it in the sidecar — best-effort, since file
-        visibility there isn't transactional to begin with.
+        batch id, and the txn high-water mark is stored INSIDE the
+        manifest head, so the id advance and the file-list flip commit
+        in one CAS publish (the Delta txn-appId pattern).
+
+        CHECK constraints are read from the latest head when the write
+        starts; if another handle changes them before this batch
+        commits, the commit refuses (nothing becomes visible) and the
+        caller re-runs the write under the new constraints.
 
         Returns the number of rows appended (0 for a replayed txn).
         """
@@ -381,8 +463,11 @@ class Table:
                          cluster_by, max_records_per_file, txn) -> int:
         # CHECK violation counts fold into the one stats pass the
         # append already pays (df is persisted) — the refusal fires
-        # BEFORE any file lands, with a per-check count.
-        checks = list((self._meta.checks or {}).items())
+        # BEFORE any file lands, with a per-check count.  The checks come
+        # from the head, not this handle: another handle may have added
+        # one since this one opened.
+        checks_now = self._head_meta(self._latest_head()[1])["checks"]
+        checks = list(checks_now.items())
         stats = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.count(ts).alias("n_ts"),
@@ -442,44 +527,31 @@ class Table:
         writer = clustered.write.mode("overwrite")
         if max_records_per_file is not None:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        if self._meta.compression:
-            writer = writer.option("compression", self._meta.compression)
-        # Stage in a per-batch directory, then rename part files into
-        # place.  Two jobs appending directly to the same path share ONE
-        # `_temporary` staging dir and each job's commit deletes the
-        # other's in-flight task files (observed: FileNotFoundException at
-        # commitJob under 4 concurrent appends).  Unique staging + rename
-        # (part filenames already carry job UUIDs) makes concurrent
-        # appends compose; batch-level atomic VISIBILITY would need a
-        # manifest log on top (readers may glimpse a partially-moved
-        # batch after a mid-move crash).
+        return self._commit_append_cas(self._stage_and_land(writer),
+                                       n, lo, hi, txn, checks_now)
+
+    def _stage_and_land(self, writer) -> list[str]:
+        """Write ``writer`` (a ``DataFrameWriter`` over rows carrying
+        ``dt``) into a private staging directory with the table's codec,
+        then move its part files into the data tree; returns their
+        manifest-relative paths.  Staging per job matters: two jobs
+        writing straight into one path share ONE ``_temporary`` dir, and
+        each job's commit deletes the other's in-flight task files
+        (FileNotFoundException at commitJob under 4 concurrent appends).
+        Landed files are invisible until a manifest commit names them."""
         import uuid
 
+        if self._meta.compression:
+            writer = writer.option("compression", self._meta.compression)
         staging = os.path.join(self.path, "_staging", uuid.uuid4().hex)
-        writer.partitionBy("dt").parquet(staging)
-        dest_root = os.path.join(self.path, "parquet")
+        moved: list[str] = []
         try:
-            if self._meta.manifest:
-                # LOCK-FREE commit: part filenames are unique, so moves
-                # need no coordination; visibility + stats + txn marks
-                # all flip in ONE optimistic CAS manifest publish.
-                return self._commit_append_cas(staging, dest_root,
-                                               n, lo, hi, txn)
-            # Listing mode: take the table lock BEFORE moving files into
-            # the data tree — a lock timeout then aborts with the batch
-            # still in _staging (invisible, cleaned below) instead of
-            # leaving visible rows with a stale sidecar.  The moves are
-            # renames (microseconds), so holding the lock across them
-            # costs concurrent appends nothing.
-            moved: list[str] = []
-            with self._meta_lock():
-                if txn is not None and self._last_txn(txn[0]) >= txn[1]:
-                    return 0  # lost the race to a concurrent replay
-                self._move_staged(staging, dest_root, moved)
-                self._merge_meta_locked(n, lo, hi, txn=txn)
+            writer.partitionBy("dt").parquet(staging)
+            self._move_staged(staging, os.path.join(self.path, "parquet"),
+                              moved)
+            return moved
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        return n
 
     @staticmethod
     def _move_staged(staging: str, dest_root: str,
@@ -499,41 +571,51 @@ class Table:
                            os.path.join(dst_dir, fname))
                 moved.append(f"{dt_dir}/{fname}")
 
-    def _commit_append_cas(self, staging: str, dest_root: str, n: int,
-                           lo: int, hi: int,
-                           txn: tuple[str, int] | None) -> int:
-        """Manifest-mode append commit — optimistic, NO lock file.
+    def _commit_append_cas(self, moved: list[str], n: int, lo: int,
+                           hi: int, txn: tuple[str, int] | None,
+                           checks: dict) -> int:
+        """Append commit — optimistic, NO lock file.
 
-        Uniquely-named part files move into the data tree without
-        coordination (invisible until committed); then one CAS manifest
-        publish flips the file list, row stats, and streaming txn mark
-        together.  Two concurrent writers can both move, both attempt
-        ``v+1``; the loser's exclusive create fails, it re-reads ``v+1``
-        and publishes ``v+2`` — zero lost batches, no lock to leak or
-        steal.  This is the object-store-safe protocol (exclusive create
-        maps to a conditional PUT); the O_EXCL lock file survives only
-        for listing-mode sidecar merges.
+        Uniquely-named part files are already in the data tree
+        (invisible until committed); one CAS manifest publish flips the
+        file list, row stats, and streaming txn mark together.  Two
+        concurrent writers can both attempt ``v+1``; the loser's
+        exclusive create fails, it re-reads ``v+1`` and publishes
+        ``v+2`` — zero lost batches, no lock to leak or steal.  This is
+        the object-store-safe protocol (exclusive create maps to a
+        conditional PUT).
 
-        A replayed streaming txn detected inside the CAS loop aborts:
-        its already-moved files are unlinked (they were never visible).
+        A commit refused inside the CAS loop — a replayed streaming txn,
+        or CHECK constraints changed since ``checks`` was read — unlinks
+        the landed files (they were never visible).  Any other failure
+        leaves them for ``vacuum()``, like a crash would.
         """
-        moved: list[str] = []
-        self._move_staged(staging, dest_root, moved)
-        fstats = self._collect_file_stats(dest_root, moved)
-        if self._commit_append_manifest(moved, n, lo, hi, txn,
-                                        fstats) is None:
-            for rel in moved:  # replay abort: files were never visible
+        dest_root = os.path.join(self.path, "parquet")
+
+        def unlink_landed() -> None:
+            for rel in moved:
                 try:
                     os.unlink(os.path.join(dest_root, rel))
                 except OSError:
                     pass
+
+        fstats = self._collect_file_stats(dest_root, moved)
+        try:
+            v = self._commit_append_manifest(moved, n, lo, hi, txn,
+                                             fstats, checks)
+        except _ChecksChanged:
+            unlink_landed()
+            raise
+        if v is None:
+            unlink_landed()
             return 0
         return n
 
     def _commit_append_manifest(self, moved: list[str], n: int, lo: int,
                                 hi: int,
                                 txn: tuple[str, int] | None,
-                                fstats: dict | None = None
+                                fstats: dict | None = None,
+                                checks: dict | None = None
                                 ) -> int | None:
         """CAS-publish one appended batch into the chunked manifest.
 
@@ -550,11 +632,19 @@ class Table:
         Segments written by a CAS attempt that loses the race become
         unreferenced orphans; ``vacuum()`` sweeps them past the grace
         window.  Returns the committed version, or None on txn replay.
+        ``checks`` (the CHECK constraints the batch was validated
+        against) must still be the head's, or the commit raises.
         """
         def upd(head: dict) -> dict | None:
             if (txn is not None
                     and int(head["txns"].get(txn[0], -1)) >= txn[1]):
                 return None
+            if (checks is not None
+                    and self._head_meta(head)["checks"] != checks):
+                raise _ChecksChanged(
+                    f"CHECK constraints of {self.path} changed while this "
+                    "batch was written — nothing was committed; re-run "
+                    "the write")
             segs = list(head["segments"])
             tail = head["tail"] + moved
             tail_stats = {**head.get("fstats", {}), **(fstats or {})}
@@ -589,92 +679,6 @@ class Table:
             return nh
 
         return self._commit_manifest_head(upd)
-
-    def _merge_meta_locked(self, n: int, lo: int, hi: int,
-                           txn: tuple[str, int] | None = None) -> None:
-        """Fold one appended batch into the sidecar; caller HOLDS the
-        lock.  LISTING-MODE ONLY — manifest tables commit everything
-        (files, stats, txns) through the lock-free CAS path instead.
-
-        Concurrent appends are data-safe by construction (each job writes
-        uniquely-named part files); the sidecar was the only race.  Under
-        the lock the CURRENT sidecar is re-read and the batch merged
-        additively (count adds, min/max fold), so two writers' updates
-        compose instead of last-write-wins.  The out-of-order check
-        remains best-effort against the max_ts read at write() entry —
-        single-writer semantics, like the reference.  NB: O_EXCL lock
-        files coordinate writers on a POSIX/HDFS-like FS; object stores
-        should use manifest mode, whose CAS commit needs no lock.
-        """
-        meta_path = os.path.join(self.path, "_meta")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                cur = _Meta.from_json(f.read())
-        else:
-            cur = self._meta
-        cur.row_count += n
-        cur.min_ts = lo if cur.min_ts is None else min(cur.min_ts, lo)
-        cur.max_ts = hi if cur.max_ts is None else max(cur.max_ts, hi)
-        if txn is not None:
-            cur.txns[txn[0]] = txn[1]  # listing-mode fallback record
-        self._meta = cur
-        self._flush_meta()
-
-    @contextmanager
-    def _meta_lock(self, timeout_s: float = 10.0, stale_s: float = 60.0):
-        """O_EXCL lock file serializing every sidecar/manifest mutation
-        (append merge, compaction flip, vacuum).
-
-        The lock file records ``pid started_at`` so operators can see the
-        holder.  A lock whose mtime is older than ``stale_s`` is presumed
-        abandoned by a crashed writer (every legitimate hold is
-        milliseconds — renames + one json write) and is STOLEN: rename to
-        a unique grave name (atomic — exactly one stealer wins), re-check
-        age on the renamed file (if a fresh lock slipped into the window
-        it is renamed straight back), then retry acquisition.  Without
-        reclamation one crashed writer blocks every future append/compact
-        /vacuum forever.
-        """
-        import time as _time
-        import uuid as _uuid
-
-        lock = os.path.join(self.path, "_meta.lock")
-        deadline = _time.time() + timeout_s
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, f"{os.getpid()} {_time.time():.3f}".encode())
-                break
-            except FileExistsError:
-                try:
-                    age = _time.time() - os.path.getmtime(lock)
-                except OSError:
-                    continue  # holder released between open and stat
-                if age >= stale_s:
-                    grave = f"{lock}.stale.{_uuid.uuid4().hex}"
-                    try:
-                        os.rename(lock, grave)
-                    except OSError:
-                        continue  # another stealer (or release) won
-                    try:
-                        if _time.time() - os.path.getmtime(grave) >= stale_s:
-                            os.unlink(grave)
-                        else:  # renamed a FRESH lock: restore it
-                            os.rename(grave, lock)
-                    except OSError:
-                        pass
-                    continue
-                if _time.time() >= deadline:
-                    raise TimeoutError(f"could not acquire {lock}")
-                _time.sleep(0.05)
-        try:
-            yield
-        finally:
-            os.close(fd)
-            try:
-                os.unlink(lock)
-            except FileNotFoundError:
-                pass  # stolen mid-hold (pathological stale_s); harmless
 
     # ------------------------------------------------------------------ #
     # snapshot manifest (batch-level atomic visibility)                  #
@@ -825,9 +829,11 @@ class Table:
         migration): small lists ride inline in the tail; large ones seal
         into one fresh segment so the head stays O(KB).  ``fstats``
         maps live files to their stats; tail files keep theirs in the
-        head, sealed files carry theirs into the segment."""
+        head, sealed files carry theirs into the segment.  Every other
+        head key (stats, txns, schema metadata) carries over."""
         fstats = fstats or {}
-        nh = {k: head[k] for k in ("txns", "row_count", "min_ts", "max_ts")}
+        nh = {k: v for k, v in head.items()
+              if k not in ("segments", "tail", "fstats")}
         if len(files) <= self._SEAL_TAIL:
             nh.update(segments=[], tail=list(files),
                       fstats={f: fstats[f] for f in files
@@ -853,17 +859,7 @@ class Table:
 
     def _last_txn(self, app_id: str) -> int:
         """Last committed streaming batch id for ``app_id`` (-1 if none)."""
-        if self._meta.manifest:
-            _, head = self._latest_head()
-            txns = head["txns"]
-        else:
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    txns = _Meta.from_json(f.read()).txns
-            else:
-                txns = self._meta.txns
-        return int(txns.get(app_id, -1))
+        return int(self._latest_head()[1]["txns"].get(app_id, -1))
 
     def _commit_manifest_head(self, update_fn, max_retries: int = 200):
         """Optimistic version-check commit (the multi-writer protocol).
@@ -903,7 +899,9 @@ class Table:
         """Full-doc CAS commit: ``update_fn`` sees/returns a doc with the
         MATERIALIZED ``files`` list.  For wholesale rewrites (compaction
         flip, migration) where O(file-count) work is inherent anyway;
-        appends use the O(head) ``_commit_append_manifest`` path."""
+        appends use the O(head) ``_commit_append_manifest`` path.  Any
+        key the returned doc adds (e.g. a migration's ``schema``) is
+        published into the head as well."""
         def head_fn(head: dict):
             doc = {"files": self._files_of_head(head), "txns": head["txns"],
                    "row_count": head["row_count"], "min_ts": head["min_ts"],
@@ -914,8 +912,8 @@ class Table:
                 return None
             nh = self._head_from_files(ndoc["files"], head,
                                        ndoc.get("fstats"))
-            for k in ("txns", "row_count", "min_ts", "max_ts"):
-                nh[k] = ndoc[k]
+            nh.update({k: v for k, v in ndoc.items()
+                       if k not in ("files", "fstats")})
             return nh
 
         return self._commit_manifest_head(head_fn, max_retries)
@@ -957,11 +955,9 @@ class Table:
             return self._files_of_head(self._normalize_head(json.load(f)))
 
     def snapshot(self, version: int) -> DataFrame:
-        """Time-travel read: the table exactly as of manifest ``version``
-        (manifest-mode tables only).  Compaction rewrites files, so
-        pre-compaction snapshots are readable only until ``vacuum()``."""
-        if not self._meta.manifest:
-            raise ValueError("snapshot() requires a manifest=True table")
+        """Time-travel read: the table exactly as of manifest
+        ``version``.  Compaction rewrites files, so pre-compaction
+        snapshots are readable only until ``vacuum()``."""
         files = self._version_files(version)
         p = os.path.join(self.path, "parquet")
         if not files:
@@ -973,7 +969,7 @@ class Table:
     def changes_between(self, from_version: int,
                         to_version: int | None = None) -> DataFrame:
         """Row-level change feed between two snapshots (the Delta CDF
-        shape, r17; manifest tables only): every table column plus
+        shape, r17): every table column plus
         ``dt`` and a ``_change_type`` column — ``'insert'`` for rows
         present at ``to_version`` but not ``from_version``,
         ``'delete'`` for the reverse; an update surfaces as its
@@ -1008,9 +1004,6 @@ class Table:
         on the empty path and the file-diff path alike, so unioning
         successive feed batches never schema-mismatches on an empty
         batch (ADVICE r17)."""
-        if not self._meta.manifest:
-            raise ValueError(
-                "changes_between() requires a manifest=True table")
         if to_version is None:
             to_version = self._latest_head()[0]
         if from_version > to_version:
@@ -1054,34 +1047,11 @@ class Table:
             return del_ if del_ is not None else empty
         return ins.unionByName(del_) if del_ is not None else ins
 
-    def _land_staging(self, staging: str, src: str) -> list[str]:
-        """Move staged ``dt=*/part`` files into the live tree and
-        return their manifest-relative paths — the ONE copy of the
-        rewrite-landing rules (unique part names alongside the old
-        files, hidden files skipped, staging removed), shared by
-        ``compact()`` and ``_rewrite_where`` so a future change to
-        the landing semantics cannot silently miss one of them (r16
-        review finding)."""
-        moved: list[str] = []
-        for dt_dir in os.listdir(staging):
-            sdir = os.path.join(staging, dt_dir)
-            if not (os.path.isdir(sdir) and dt_dir.startswith("dt=")):
-                continue
-            ddir = os.path.join(src, dt_dir)
-            os.makedirs(ddir, exist_ok=True)
-            for fname in os.listdir(sdir):
-                if fname.startswith(("_", ".")):
-                    continue
-                os.replace(os.path.join(sdir, fname),
-                           os.path.join(ddir, fname))
-                moved.append(f"{dt_dir}/{fname}")
-        shutil.rmtree(staging, ignore_errors=True)
-        return moved
-
     def _flip_replacing(self, replaced: set[str], moved: list[str],
                         src: str, op_name: str,
                         row_count_delta: int = 0,
-                        bounds: tuple[int, int] | None = None) -> None:
+                        bounds: tuple[int, int] | None = None,
+                        meta: dict | None = None) -> None:
         """CAS-flip a file-set rewrite: every path in ``replaced``
         leaves the manifest, ``moved`` enters, row_count adjusts by
         ``row_count_delta`` — the ONE copy of the supersede-guard +
@@ -1090,7 +1060,9 @@ class Table:
         ts range into the head's min/max stats — ``merge_into``'s
         inserts can extend the table beyond the bounds the appends
         recorded, and a flip that left them stale would make
-        ``get_first_ts``/``get_last_ts`` lie to the pruning layer.  If ANY replaced file was already
+        ``get_first_ts``/``get_last_ts`` lie to the pruning layer.
+        ``meta`` (head metadata keys, e.g. a migration's ``schema``)
+        publishes in the same CAS.  If ANY replaced file was already
         superseded by a concurrent rewrite, committing our copy of its
         OLD rows would resurrect rows that writer removed (and
         duplicate the ones it kept), so the flip aborts loudly: our
@@ -1122,6 +1094,7 @@ class Table:
                                 else min(doc["min_ts"], lo))
                 nh["max_ts"] = (hi if doc["max_ts"] is None
                                 else max(doc["max_ts"], hi))
+            nh.update(meta or {})
             return nh
 
         if self._commit_manifest(flip) is None:
@@ -1167,9 +1140,7 @@ class Table:
         (retry) instead of resurrecting deleted rows by keeping the
         other writer's rewrite of them.  ``row_count`` is maintained;
         min/max ts bounds stay unchanged (conservative — still valid
-        for pruning).  Manifest tables only: listing mode has no
-        snapshot to isolate against (use manifest=True, or filter at
-        read)."""
+        for pruning)."""
         return self._rewrite_where(condition, "delete", None)
 
     def update_where(self, condition,
@@ -1245,10 +1216,6 @@ class Table:
         merged — re-run for late arrivals.  Returns
         ``{"matched", "updated", "deleted", "inserted"}``.
         """
-        if not self._meta.manifest:
-            raise ValueError(
-                "merge_into() requires a manifest=True table "
-                "(copy-on-write needs snapshot isolation)")
         if when_matched not in ("update", "delete", None):
             raise ValueError(
                 f"when_matched must be 'update', 'delete' or None, "
@@ -1299,7 +1266,6 @@ class Table:
                 if c not in known:
                     raise KeyError(
                         f"merge_into: unknown column {c!r}")
-        import uuid
 
         # normalize key columns to the declared type + ts resolution
         # floor so raw-source keys match what write() stored
@@ -1507,14 +1473,7 @@ class Table:
                        .sortWithinPartitions(*sort_cols))
                 if zkeyed:
                     out = out.drop("_zkey")
-                writer = out.write.mode("overwrite")
-                if self._meta.compression:
-                    writer = writer.option("compression",
-                                           self._meta.compression)
-                staging = os.path.join(self.path, "_staging",
-                                       uuid.uuid4().hex)
-                writer.partitionBy("dt").parquet(staging)
-                moved = self._land_staging(staging, src)
+                moved = self._stage_and_land(out.write.mode("overwrite"))
             finally:
                 if ins is not None:
                     ins.unpersist()
@@ -1567,13 +1526,6 @@ class Table:
 
     def _rewrite_where(self, condition, mode: str,
                        assignments: dict[str, object] | None) -> int:
-        if not self._meta.manifest:
-            raise ValueError(
-                f"{mode}_where() requires a manifest=True table "
-                "(copy-on-write needs snapshot isolation); filter at "
-                "read, or recreate the table with manifest=True")
-        import uuid
-
         cond = (F.expr(condition) if isinstance(condition, str)
                 else condition)
         src, base_files, read_files, rel = self._cow_read()
@@ -1633,13 +1585,7 @@ class Table:
                .sortWithinPartitions(*sort_cols))
         if zkeyed:
             out = out.drop("_zkey")
-        writer = out.write.mode("overwrite")
-        if self._meta.compression:
-            writer = writer.option("compression",
-                                   self._meta.compression)
-        staging = os.path.join(self.path, "_staging", uuid.uuid4().hex)
-        writer.partitionBy("dt").parquet(staging)
-        moved = self._land_staging(staging, src)
+        moved = self._stage_and_land(out.write.mode("overwrite"))
 
         if mode == "delete":
             # n_deleted from the REWRITE itself (ADVICE r16): parquet
@@ -1967,11 +1913,8 @@ class Table:
         ``write()`` moves part files into place BEFORE committing them to
         the manifest, so an unreferenced file younger than the grace
         window may simply not be committed yet and is left alone (the
-        same reason Delta's VACUUM has a retention period).  The manifest
-        flip itself is read under the table lock.
+        same reason Delta's VACUUM has a retention period).
         """
-        if not self._meta.manifest:
-            raise ValueError("vacuum() requires a manifest=True table")
         if keep_versions < 0:
             raise ValueError(f"keep_versions must be >= 0, "
                              f"got {keep_versions}")
@@ -2039,7 +1982,9 @@ class Table:
         return removed
 
     def _flush_meta(self) -> None:
-        """Persist sidecar (W7/W8, /root/reference/src/table/meta.rs:17-37).
+        """Persist the sidecar descriptor (W7/W8,
+        /root/reference/src/table/meta.rs:17-37): at create, after a
+        schema commit, and when a legacy table is bootstrapped.
 
         Write-then-rename so a crash mid-flush can never leave a torn
         ``_meta`` — the durability step the reference gets from its
@@ -2079,33 +2024,26 @@ class Table:
         return df
 
     def df(self) -> DataFrame:
-        # The whole snapshot as Spark's own discovery sees it: footer
-        # schema inference on non-evolved tables, and on listing tables
-        # a root read whose ``dt`` Spark infers (as a date for daily
-        # partitions).  ``scan()`` does not come through here; it reads
-        # via ``_df_pruned``, which declares the schema and chooses the
-        # partitions itself, so planning it launches no Spark job.
+        # The latest snapshot as Spark's own discovery sees it: footer
+        # schema inference on non-evolved tables, and a ``dt`` Spark
+        # infers (as a date for daily partitions).  ``scan()`` does not
+        # come through here; it reads via ``_df_pruned``, which declares
+        # the schema, so planning it launches no Spark job.
         p = os.path.join(self.path, "parquet")
         evolved = bool(self._meta.added_defaults
                        or self._meta.dropped_columns)
         reader = self.spark.read
         if evolved:
             reader = reader.schema(self._read_schema())
-        if self._meta.manifest:
-            # Snapshot read: only files the manifest committed are
-            # visible.  basePath keeps hive-partition (dt) discovery —
-            # and with it directory pruning — over the explicit list.
-            _, files = self._latest_manifest()
-            if not files:
-                return self.spark.createDataFrame(
-                    [], self.schema.spark_schema().add("dt", "string"))
-            out = (reader.option("basePath", p)
-                   .parquet(*[os.path.join(p, f) for f in files]))
-            return self._apply_added_defaults(out) if evolved else out
-        if not os.path.exists(p):
-            return self.spark.createDataFrame([], self.schema.spark_schema()
-                                              .add("dt", "string"))
-        out = reader.parquet(p)
+        # Only files the manifest committed are visible.  basePath keeps
+        # hive-partition (dt) discovery — and with it directory pruning —
+        # over the explicit list.
+        _, files = self._latest_manifest()
+        if not files:
+            return self.spark.createDataFrame(
+                [], self.schema.spark_schema().add("dt", "string"))
+        out = (reader.option("basePath", p)
+               .parquet(*[os.path.join(p, f) for f in files]))
         return self._apply_added_defaults(out) if evolved else out
 
     def _df_pruned(self, ts_bounds: tuple | None) -> DataFrame:
@@ -2114,97 +2052,61 @@ class Table:
         ``ts_bounds=(lo, hi)`` (either end None-able, nanos, inclusive)
         narrows the inputs before Spark sees them, the way zdb picks
         partitions from its own metadata (``src/table/scan.rs:67-74``):
+        of the latest head's files, only those whose recorded ts stats
+        overlap the range are kept (``_prune_files_by_stats``).
 
-        - manifest tables keep the committed files whose recorded ts
-          stats overlap the range (``_prune_files_by_stats``);
-        - listing tables keep the ``dt=`` directories whose value lies
-          in ``[_dt_str_for(lo), _dt_str_for(hi)]`` (``_listed_paths``).
-
-        Every read declares ``_read_schema()``, so no footer is sampled
-        to infer one, and passes ``basePath`` so ``dt`` stays a
-        partition column and Spark's hidden-file rules still apply
-        inside each directory.  Pruning is file/directory granular: the
-        caller still applies the row-level predicate."""
+        The read declares ``_read_schema()``, so no footer is sampled to
+        infer one, and passes ``basePath`` so ``dt`` stays a partition
+        column.  An explicit file list is listed on the driver under the
+        session's parallel-listing threshold.  Pruning is file granular:
+        the caller still applies the row-level predicate."""
         lo, hi = ts_bounds if ts_bounds is not None else (None, None)
         p = os.path.join(self.path, "parquet")
-        if self._meta.manifest:
-            _, head = self._latest_head()
-            files = self._files_of_head(head)
-            if lo is not None or hi is not None:
-                files = self._prune_files_by_stats(
-                    files, self._stats_of_head(head),
-                    {self.schema.ts_col: (lo, hi)})
-            paths = [os.path.join(p, f) for f in files]
-        else:
-            paths = self._listed_paths(p, lo, hi)
+        _, head = self._latest_head()
+        files = self._files_of_head(head)
+        if lo is not None or hi is not None:
+            files = self._prune_files_by_stats(
+                files, self._stats_of_head(head),
+                {self.schema.ts_col: (lo, hi)})
         schema = self._read_schema()
-        if not paths:
+        if not files:
             return self.spark.createDataFrame([], schema)
         out = (self.spark.read.schema(schema).option("basePath", p)
-               .parquet(*paths))
+               .parquet(*[os.path.join(p, f) for f in files]))
         return self._apply_added_defaults(out)
-
-    def _listed_paths(self, root: str, lo, hi) -> list[str]:
-        """Read paths of a listing-mode table for ``[lo, hi]``: one
-        ``os.scandir`` of ``root`` keeps the ``dt=`` directories in
-        range, by the same string comparison ``scan()`` applies to
-        ``dt``.  The whole root is returned when there is nothing to
-        prune by (no bounds, or no date partitioning) and when a raw
-        ``stream_writer`` sink feeds the table: its ``_spark_metadata``
-        log, not the directory tree, is then the file list, and Spark
-        honours it only on a root read."""
-        if not os.path.isdir(root):
-            return []
-        fmt = self.schema.partition_by.date_format
-        if (fmt is None or (lo is None and hi is None)
-                or os.path.isdir(os.path.join(root, "_spark_metadata"))):
-            return [root]
-        dt_lo = _dt_str_for(lo, fmt) if lo is not None else None
-        dt_hi = _dt_str_for(hi, fmt) if hi is not None else None
-        with os.scandir(root) as entries:
-            return sorted(
-                e.path for e in entries
-                if e.name.startswith("dt=") and e.is_dir()
-                and (dt_lo is None or e.name[3:] >= dt_lo)
-                and (dt_hi is None or e.name[3:] <= dt_hi))
 
     def add_column(self, name: str, col_type: ColumnType,
                    default=None) -> None:
         """METADATA-ONLY schema evolution: add a column without touching
         a single data file — the only add-column that works at 100 TB
-        (a rewrite is petabytes of IO; this is one sidecar update).
+        (a rewrite is petabytes of IO; this is one manifest commit).
 
         Existing files surface the column as NULL, or as ``default``
         when given (applied at read time via coalesce, so the files stay
         byte-identical and the default can be changed by a later
         migration).  New writes must carry the column — or omit it and
         have ``default`` filled in (write-time fill uses the same
-        default).  Runs under the meta lock; on manifest tables the
-        sidecar schema is still the single schema authority, so the CAS
-        file-list flips are unaffected.
+        default).  One manifest commit; data files are untouched.
         """
-        if any(c.name == name for c in self.schema.columns) or name == "dt":
+        if name == "dt":
             raise ValueError(f"column {name!r} already exists")
         _validate_default(name, col_type, default)
-        with self._meta_lock():
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    self._meta = _Meta.from_json(f.read())
-                self.schema = Schema.from_dict(self._meta.schema)
-                if any(c.name == name for c in self.schema.columns):
-                    raise ValueError(f"column {name!r} already exists")
-            if name in self._meta.dropped_columns:
+
+        def change(meta: dict) -> None:
+            schema = Schema.from_dict(meta["schema"])
+            if any(c.name == name for c in schema.columns):
+                raise ValueError(f"column {name!r} already exists")
+            if name in meta["dropped_columns"]:
                 # old files still hold the dropped column, possibly with
                 # a different type — an explicit-schema read over them
                 # would then fail; re-use is the rewrite's job
                 raise ValueError(
                     f"column {name!r} was previously dropped; re-adding "
                     "requires an offline rewrite (convert_column_type)")
-            self.schema.add_col(name, col_type)
-            self._meta.schema = self.schema.to_dict()
-            self._meta.added_defaults[name] = default
-            self._flush_meta()
+            meta["schema"] = schema.add_col(name, col_type).to_dict()
+            meta["added_defaults"][name] = default
+
+        self._commit_meta(change)
 
     def add_check(self, name: str, expr: str,
                   validate_existing: bool = True) -> None:
@@ -2220,7 +2122,9 @@ class Table:
         expressions are rejected outright (the check is evaluated at
         write time and re-evaluated on rewrites; a coin-flip
         constraint would accept and reject the same row on different
-        passes).  Stored in the sidecar under the meta lock."""
+        passes).  Published by one manifest commit; writers validate
+        against the head's checks, so handles opened earlier enforce it
+        too."""
         if not name or not name.replace("_", "").isalnum():
             raise ValueError(f"check name {name!r}: use an identifier")
         probe = self.df()
@@ -2244,28 +2148,21 @@ class Table:
                     f"(e.g. {bad[0].asDict()!r}) — clean the table "
                     "first, or pass validate_existing=False to "
                     "enforce forward-only")
-        with self._meta_lock():
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    self._meta = _Meta.from_json(f.read())
-                self.schema = Schema.from_dict(self._meta.schema)
-            if name in self._meta.checks:
+        def change(meta: dict) -> None:
+            if name in meta["checks"]:
                 raise ValueError(f"check {name!r} already exists")
-            self._meta.checks[name] = expr
-            self._flush_meta()
+            meta["checks"][name] = expr
+
+        self._commit_meta(change)
 
     def drop_check(self, name: str) -> None:
         """Remove a CHECK constraint; rows already written stay."""
-        with self._meta_lock():
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    self._meta = _Meta.from_json(f.read())
-            if name not in self._meta.checks:
+        def change(meta: dict) -> None:
+            if name not in meta["checks"]:
                 raise KeyError(f"no check named {name!r}")
-            del self._meta.checks[name]
-            self._flush_meta()
+            del meta["checks"][name]
+
+        self._commit_meta(change)
 
     def describe_files(self) -> DataFrame:
         """One row per LIVE data file from manifest metadata alone
@@ -2276,9 +2173,6 @@ class Table:
         reads, no Spark job against the data; the frame is
         file-count-sized, which is exactly what an operator debugging
         a pruning decision or a compaction policy wants to eyeball."""
-        if not self._meta.manifest:
-            raise ValueError(
-                "describe_files() requires a manifest=True table")
         _, head = self._latest_head()
         files = self._files_of_head(head)
         stats = self._stats_of_head(head)
@@ -2314,7 +2208,7 @@ class Table:
         UPDATE) whose single pass over rewritten data should not be
         doubled by a count; ``write()`` prefers the pre-write count
         (better message, refuses before any file lands)."""
-        checks = self._meta.checks or {}
+        checks = self._head_meta(self._latest_head()[1])["checks"]
         if not checks:
             return df
         guard = df.columns[0]
@@ -2328,7 +2222,7 @@ class Table:
         return df.withColumn(guard, c0)
 
     def drop_column(self, name: str) -> None:
-        """METADATA-ONLY column drop: the sidecar schema shrinks; data
+        """METADATA-ONLY column drop: the table schema shrinks; data
         files are untouched (their bytes for the column become dead and
         are reclaimed whenever ``compact()`` rewrites a partition).
         Reads project the column away via the explicit evolved schema;
@@ -2338,21 +2232,17 @@ class Table:
         """
         if name == self.schema.ts_col or name == "dt":
             raise ValueError(f"cannot drop {name!r}")
-        with self._meta_lock():
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    self._meta = _Meta.from_json(f.read())
-                self.schema = Schema.from_dict(self._meta.schema)
-            if not any(c.name == name for c in self.schema.columns):
+        def change(meta: dict) -> None:
+            schema = Schema.from_dict(meta["schema"])
+            if not any(c.name == name for c in schema.columns):
                 raise KeyError(f"no such column {name!r}")
-            self.schema.columns = [c for c in self.schema.columns
-                                   if c.name != name]
-            self._meta.schema = self.schema.to_dict()
-            self._meta.added_defaults.pop(name, None)
-            if name not in self._meta.dropped_columns:
-                self._meta.dropped_columns.append(name)
-            self._flush_meta()
+            schema.columns = [c for c in schema.columns if c.name != name]
+            meta["schema"] = schema.to_dict()
+            meta["added_defaults"].pop(name, None)
+            if name not in meta["dropped_columns"]:
+                meta["dropped_columns"].append(name)
+
+        self._commit_meta(change)
 
     def scan(self, from_ts=None, to_ts=None,
              columns: list[str] | None = None) -> DataFrame:
@@ -2424,24 +2314,24 @@ class Table:
         restores ~``target_file_mb`` files and re-establishes the sort
         (optionally with ``cluster_by`` secondary clustering).
 
-        Directory-listing mode writes to a sibling dir then swaps, so a
-        mid-rewrite failure leaves the original intact.  Manifest mode
-        never swaps: compacted files land ALONGSIDE the old ones (unique
-        part names), the manifest flips atomically to the new set, and
-        the superseded files stay on disk — still serving concurrent
-        readers of older snapshots — until ``vacuum()``.  That ordering
-        is the object-store-safe pattern; a swap would yank files out
-        from under a reader holding the previous manifest.
+        Nothing is swapped or deleted: compacted files land ALONGSIDE
+        the old ones (unique part names), the manifest flips atomically
+        to the new set, and the superseded files stay on disk — still
+        serving concurrent readers of older snapshots — until
+        ``vacuum()``.  That ordering is the object-store-safe pattern; a
+        swap would yank files out from under a reader holding the
+        previous manifest.
         """
         src = os.path.join(self.path, "parquet")
-        if not os.path.exists(src):
-            return 0
-        # manifest mode compacts ONE committed snapshot, read ONCE: the
-        # rewrite DataFrame is built from the same file list remembered
-        # as base_files for the flip.  (Reading the manifest a second
-        # time via self.df() would race: an append committed between the
-        # two reads gets compacted into the rewrite AND preserved as a
+        # Compact ONE committed snapshot, read ONCE: the rewrite
+        # DataFrame is built from the same file list remembered as
+        # base_files for the flip.  (Reading the manifest a second time
+        # via self.df() would race: an append committed between the two
+        # reads gets compacted into the rewrite AND preserved as a
         # survivor at the flip — duplicated rows.)
+        _, base_files = self._latest_manifest()
+        if not base_files:
+            return 0
         # Evolved tables MUST compact through the explicit read schema +
         # materialized defaults: footer inference samples ONE file, and a
         # pre-evolution file would make the rewrite silently drop an
@@ -2453,37 +2343,15 @@ class Table:
         reader = self.spark.read
         if evolved:
             reader = reader.schema(self._read_schema())
-        base_files: list[str] = []
-        if self._meta.manifest:
-            with self._meta_lock():
-                _, base_files = self._latest_manifest()
-            if base_files:
-                df = (reader.option("basePath", src)
-                      .parquet(*[os.path.join(src, f) for f in base_files]))
-            else:
-                df = self.spark.createDataFrame(
-                    [], self.schema.spark_schema().add("dt", "string"))
-            # size from the snapshot's files — a directory walk would
-            # count superseded/orphan files and over-split the output
-            total_bytes = sum(
-                os.path.getsize(os.path.join(src, f)) for f in base_files
-                if os.path.exists(os.path.join(src, f)))
-        else:
-            # read from an EXPLICIT file snapshot (not a directory scan
-            # at job time): the swap below preserves any file appended
-            # after this listing, so a concurrent write() is never lost
-            base_files = [
-                os.path.relpath(os.path.join(root, f), src)
-                for root, _, files in os.walk(src) for f in files
-                if not f.startswith(("_", "."))]
-            if not base_files:
-                return 0
-            df = (reader.option("basePath", src)
-                  .parquet(*[os.path.join(src, f) for f in base_files]))
-            total_bytes = sum(
-                os.path.getsize(os.path.join(src, f)) for f in base_files)
+        df = (reader.option("basePath", src)
+              .parquet(*[os.path.join(src, f) for f in base_files]))
         if evolved:
             df = self._apply_added_defaults(df)
+        # size from the snapshot's files — a directory walk would count
+        # superseded/orphan files and over-split the output
+        total_bytes = sum(
+            os.path.getsize(os.path.join(src, f)) for f in base_files
+            if os.path.exists(os.path.join(src, f)))
         ts = self.schema.ts_col
         n_files = max(1, total_bytes // (target_file_mb * 1024 * 1024))
         n_parts = df.select("dt").distinct().count()
@@ -2498,76 +2366,32 @@ class Table:
                      .sortWithinPartitions(*sort_cols))
         if zkeyed:
             clustered = clustered.drop("_zkey")
-        writer = (clustered.write.mode("overwrite")
-                  .option("maxRecordsPerFile", cap))
-        if self._meta.compression:
-            writer = writer.option("compression", self._meta.compression)
-
-        if self._meta.manifest:
-            import uuid
-
-            staging = os.path.join(self.path, "_staging", uuid.uuid4().hex)
-            writer.partitionBy("dt").parquet(staging)
-            moved = self._land_staging(staging, src)
-            # CAS flip, REPLACING only the snapshot we compacted: batches
-            # committed while the rewrite job ran are in (latest − base)
-            # and must survive — without this a concurrent append's files
-            # silently vanish from the table (and the next vacuum deletes
-            # them).  The CAS loop re-reads the latest doc on conflict,
-            # so an append that wins a version mid-flip is preserved.
-            self._flip_replacing(set(base_files), moved, src,
-                                 "compact")
-            return n_parts
-
-        tmp = src + ".compacting"
-        writer.partitionBy("dt").parquet(tmp)
-        backup = src + ".old"
-        # Swap under the sidecar lock (held for renames only — well under
-        # the lock's staleness window), then carry over every file a
-        # concurrent write() landed after the snapshot listing: without
-        # this, a batch committed mid-rewrite would ride into backup and
-        # be rmtree'd while the sidecar still counts its rows.
-        snap = set(base_files)
-        with self._meta_lock():
-            os.rename(src, backup)
-            os.rename(tmp, src)
-            for root, _, files in os.walk(backup):
-                for f in files:
-                    if f.startswith(("_", ".")):
-                        continue
-                    rel = os.path.relpath(os.path.join(root, f), backup)
-                    if rel in snap:
-                        continue
-                    dest = os.path.join(src, rel)
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    os.replace(os.path.join(backup, rel), dest)
-        shutil.rmtree(backup)
+        moved = self._stage_and_land(clustered.write.mode("overwrite")
+                                     .option("maxRecordsPerFile", cap))
+        # CAS flip, REPLACING only the snapshot we compacted: batches
+        # committed while the rewrite job ran are in (latest − base) and
+        # must survive — without this a concurrent append's files
+        # silently vanish from the table (and the next vacuum deletes
+        # them).  The CAS loop re-reads the latest doc on conflict, so an
+        # append that wins a version mid-flip is preserved.
+        self._flip_replacing(set(base_files), moved, src, "compact")
         return n_parts
 
     # ------------------------------------------------------------------ #
     # metadata queries (/root/reference/src/table/meta.rs:39-67)         #
     # ------------------------------------------------------------------ #
+    # Stats live directly in the manifest HEAD: reading them never pays
+    # _latest_manifest_doc()'s O(file-count) list materialization (these
+    # run once per append).
     def get_first_ts(self) -> int | None:
-        # stats live directly in the manifest HEAD — reading them must
-        # not pay _latest_manifest_doc()'s O(file-count) list
-        # materialization (these run once per append)
-        if self._meta.manifest:
-            return self._latest_head()[1]["min_ts"]
-        return self._meta.min_ts
+        return self._latest_head()[1]["min_ts"]
 
     def get_last_ts(self) -> int | None:
-        if self._meta.manifest:
-            return self._latest_head()[1]["max_ts"]
-        return self._meta.max_ts
+        return self._latest_head()[1]["max_ts"]
 
     @property
     def row_count(self) -> int:
-        # manifest tables keep stats IN the manifest (single atomic
-        # source of truth for the CAS protocol); the sidecar only holds
-        # schema + mode flags there
-        if self._meta.manifest:
-            return self._latest_head()[1]["row_count"]
-        return self._meta.row_count
+        return self._latest_head()[1]["row_count"]
 
     # ------------------------------------------------------------------ #
     # dictionary endpoint (§2.4, /root/reference/src/server/mod.rs:84-122)
